@@ -19,32 +19,19 @@ _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 # Executor python workers don't inherit this sys.path; PYTHONPATH set
-# before the JVM launches covers sessions created after this import...
+# before the JVM launches covers sessions created after this import, and
+# session._ship_package (addPyFile of the package zip) covers sessions
+# that already exist.
 os.environ["PYTHONPATH"] = _REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 
-
-def _ensure_shipped(spark: SparkSession) -> None:
-    """...and addPyFile covers sessions that already exist: ship the
-    package as a zip so workers can unpickle our pandas UDFs."""
-    sc = spark.sparkContext
-    if getattr(sc, "_kps_shipped", False):
-        return
-    import shutil
-    import tempfile
-
-    zip_base = os.path.join(tempfile.gettempdir(), "kinesis_producer_spark_pkg")
-    zip_path = shutil.make_archive(
-        zip_base, "zip", root_dir=_REPO_ROOT, base_dir="kinesis_producer_spark"
-    )
-    sc.addPyFile(zip_path)
-    sc._kps_shipped = True
+from kinesis_producer_spark.session import _ship_package  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from kinesis_producer_spark.operators.relational import q01_pricing_summary
 
-    _ensure_shipped(spark)
+    _ship_package(spark)
     return q01_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
@@ -55,7 +42,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def shipped(fn: Callable[[SparkSession, str], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _ensure_shipped(spark)
+            _ship_package(spark)
             return fn(spark, sf_dir)
 
         return run

@@ -10,8 +10,15 @@ schema (streaming-safe) that still preserves the reference's
 
 Dynamic mode mirrors ``SignalFlattener`` (reference
 file_flattener.py:119-145): the column set is the union of attribute
-names actually present (two passes: a cheap distinct over the names,
-then the same projection path).
+names actually present (two passes: one ``key_vocabulary`` action
+discovers the names and UoM names together, then the same projection
+path).
+
+``key_vocabulary`` is the one vocabulary-discovery step before any
+dynamic-schema widen (this pivot, ``flatten.flatten_components``,
+``pipelines.flatten_day``'s envelope keys): every key set a caller needs
+comes from a single driver action, so an expensive upstream (the Python
+XML parse) runs once for all of them.
 
 Implementation: ``map_from_entries`` + per-key ``getItem`` — entirely
 JVM-side, **zero shuffle** (the readings are already on their row;
@@ -119,10 +126,9 @@ def pivot_dynamic(
 ) -> DataFrame:
     """Accreting-schema EAV pivot: columns = distinct attribute names.
 
-    Pass 1 is a distinct over exploded names only (tiny shuffle — the
-    key domain, not the data); pass 2 reuses the zero-shuffle getItem
-    path. The collected key set is bounded by the attribute vocabulary,
-    not the data size, so the driver action is safe at any scale.
+    Pass 1 is one ``key_vocabulary`` action over the reading names and
+    the UoM-bearing names together (tiny shuffle — the key domain, not
+    the data); pass 2 reuses the zero-shuffle getItem path.
 
     BATCH ONLY: discovering the attribute vocabulary requires an
     action over the input, which Spark forbids on a stream (a stream's
@@ -139,31 +145,46 @@ def pivot_dynamic(
             "with an explicit declared schema on streams"
         )
     readings = F.col(readings_col) if isinstance(readings_col, str) else readings_col
-    names = sorted(
-        r[0]
-        for r in df.select(
-            F.explode(F.transform(readings, lambda x: x["name"])).alias("n")
-        )
-        .where(F.col("n").isNotNull())
-        .distinct()
-        .collect()
-    )
-    with_uom = sorted(
-        r[0]
-        for r in df.select(
-            F.explode(
-                F.transform(
-                    F.filter(readings, lambda x: x["uom"].isNotNull()), lambda x: x["name"]
-                )
-            ).alias("n")
-        )
-        .where(F.col("n").isNotNull())
-        .distinct()
-        .collect()
-    )
+    vocab = key_vocabulary(df, **reading_keys(readings))
     return pivot_declared(
-        df, readings, declared=names, uom_for=with_uom, keep_extras=False
+        df, readings, declared=vocab["names"], uom_for=vocab["uoms"], keep_extras=False
     )
+
+
+def reading_keys(readings: Column) -> dict[str, Column]:
+    """The key arrays ``pivot_dynamic`` discovers: reading names, and the
+    names of readings that carry a UoM."""
+    return {
+        "names": F.transform(readings, lambda x: x["name"]),
+        "uoms": F.transform(F.filter(readings, lambda x: x["uom"].isNotNull()), lambda x: x["name"]),
+    }
+
+
+def key_vocabulary(df: DataFrame, **key_arrays: Column) -> dict[str, list[str]]:
+    """Sorted distinct non-null keys of each named string-array column,
+    from ONE driver action.
+
+    Each array's keys are tagged with its name, the tagged keys of all
+    arrays are exploded once and one ``distinct().collect()`` returns
+    them all. The collected set is bounded by the key vocabulary, not
+    the data size, so the driver action is safe at any scale.
+    """
+
+    def tagged(tag: str, keys: Column) -> Column:
+        keys = F.coalesce(keys, F.array().cast("array<string>"))
+        return F.transform(keys, lambda k: F.struct(F.lit(tag).alias("tag"), k.alias("key")))
+
+    rows = (
+        df.select(F.explode(F.concat(*[tagged(t, k) for t, k in key_arrays.items()])).alias("e"))
+        .select("e.tag", "e.key")
+        .where(F.col("key").isNotNull())
+        .distinct()
+        .collect()
+    )
+    vocab: dict[str, list[str]] = {tag: [] for tag in key_arrays}
+    for tag, key in rows:
+        vocab[tag].append(key)
+    return {tag: sorted(keys) for tag, keys in vocab.items()}
 
 
 def melt(

@@ -8,14 +8,18 @@ half: explode the array, spread the document scalars onto every row
 (the reference's parent-attr denormalization, file_flattener.py:82),
 and widen the per-component field maps to columns.
 
-Column discovery (dynamic schema) is a distinct over map keys — the
-key *vocabulary*, not the data — so the driver action stays O(schema).
+Column discovery (dynamic schema) is one ``eav_pivot.key_vocabulary``
+action over the field keys and the document keys together — the key
+*vocabulary*, not the data — so the driver action stays O(schema) and
+the parse upstream runs once for both key sets.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from kinesis_producer_spark.operators.eav_pivot import key_vocabulary
 
 
 def flatten_components(
@@ -35,17 +39,12 @@ def flatten_components(
     comp = F.explode("components").alias("component")
     exploded = parsed.select(*id_cols, "doc_attrs", comp)
 
+    keys = {"doc": F.map_keys("doc_attrs")}
     if field_cols is None:
-        field_cols = sorted(
-            r[0]
-            for r in exploded.select(F.explode(F.map_keys("component.fields")).alias("k"))
-            .distinct()
-            .collect()
-        )
-    doc_keys = sorted(
-        r[0]
-        for r in exploded.select(F.explode(F.map_keys("doc_attrs")).alias("k")).distinct().collect()
-    )
+        keys["fields"] = F.map_keys("component.fields")
+    vocab = key_vocabulary(exploded, **keys)
+    doc_keys = vocab["doc"]
+    field_cols = vocab.get("fields", field_cols)
 
     cols = [*id_cols]
     # document-level scalars broadcast onto every component row

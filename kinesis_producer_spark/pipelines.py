@@ -10,12 +10,15 @@ A user of the reference runs (per day slice):
 3. ``python main.py <type>`` — paced replay into Kinesis
    (reference main.py:37-58).
 
-Here each stage is one Spark job over the same Hive layout
-(``<root>/<type>/year=Y/month=M/day=D/``). Paths are storage-agnostic
-(local, s3a://, …). Where the reference forked one OS process per day
-(mp_unpack.sh:12-19), a single job over a multi-day path scan covers
-every slice at once — pass ``year=month=day=None`` to process all
-partitions; Catalyst prunes when values are given.
+Here each stage runs over the same Hive layout
+(``<root>/<type>/year=Y/month=M/day=D/``) with a fixed number of Spark
+jobs, whatever the data: flatten runs one vocabulary discovery plus the
+write; produce runs one sorted scan and sends each event-time group
+from the driver. Paths are storage-agnostic (local, s3a://, …). Where
+the reference forked one OS process per day (mp_unpack.sh:12-19), one
+run over a multi-day path scan covers every slice at once — pass
+``year=month=day=None`` to process all partitions; Catalyst prunes when
+values are given.
 
 ``python -m kinesis_producer_spark.pipelines unpack|flatten|produce ...``
 keeps the reference's CLI shape, including its argument-domain
@@ -102,7 +105,7 @@ def flatten_day(
     SignalFlattener); ``vehicleComponent`` flattens the recursive tree
     (reference VehicleComponentFlattener). FAILFAST matches the
     reference's strict ValueError behavior."""
-    from kinesis_producer_spark.operators.eav_pivot import pivot_dynamic
+    from kinesis_producer_spark.operators.eav_pivot import key_vocabulary, pivot_declared, reading_keys
     from kinesis_producer_spark.operators.flatten import flatten_components
     from kinesis_producer_spark.sinks import write_hive_partitioned_csv
     from kinesis_producer_spark.sources.xml import (
@@ -117,13 +120,16 @@ def flatten_day(
     )
     if reading_type in SIGNALS:
         parsed = parse_signal_messages(raw, "payload", mode="FAILFAST")
-        wide = pivot_dynamic(parsed)
-        envelope_keys = sorted(
-            r[0]
-            for r in parsed.select(F.explode(F.map_keys("envelope")).alias("k")).distinct().collect()
+        # one discovery action for the pivot's names and UoM names and the
+        # envelope keys: each action re-runs the (nondeterministic) parse
+        vocab = key_vocabulary(
+            parsed, envelope=F.map_keys("envelope"), **reading_keys(F.col("readings"))
+        )
+        wide = pivot_declared(
+            parsed, declared=vocab["names"], uom_for=vocab["uoms"], keep_extras=False
         )
         flat = wide.select(
-            *[F.col("envelope").getItem(k).alias(k) for k in envelope_keys],
+            *[F.col("envelope").getItem(k).alias(k) for k in vocab["envelope"]],
             *[c for c in wide.columns if c not in raw.columns and c not in ("envelope", "readings", "_corrupt_record")],
         )
     else:

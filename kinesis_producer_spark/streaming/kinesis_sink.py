@@ -6,7 +6,9 @@ and drops the batch on error. This sink is the Spark-first rebuild:
 
 - runs inside ``writeStream.foreachBatch`` (or on any batch DataFrame),
   sending **from executors in parallel** — each partition chunks its
-  records and calls the transport; nothing funnels through the driver;
+  records and calls the transport; nothing funnels through the driver.
+  A frame already in driver memory (a local relation, e.g. one replay
+  group) is sent in-process instead, with no Spark job;
 - respects the public AWS API limits by construction: ≤500 records and
   ≤5 MB per call, ≤1 MB per record (AWS service quotas — these bound
   the reference's ``put_records`` at main.py:20);
@@ -35,9 +37,11 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MAX_RECORDS_PER_CALL = 500
 MAX_BYTES_PER_CALL = 5 * 1024 * 1024
@@ -54,6 +58,13 @@ ACK_SCHEMA = T.StructType(
         T.StructField("shard_id", T.StringType()),
     ]
 )
+
+
+def local_frame(spark, rows: list[dict], schema: T.StructType) -> DataFrame:
+    """A DataFrame over driver-resident ``rows``, built through Arrow so
+    it is a local relation (``isLocal()``): collecting it, or a
+    projection of it, launches no Spark job."""
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)), schema)
 
 
 class Transport:
@@ -585,53 +596,59 @@ class KinesisSink:
     ) -> DataFrame:
         """Send a (micro-)batch; returns the ack/dead-letter DataFrame.
 
-        Executes on executors via mapInPandas — each partition opens its
-        own transport and streams its chunks. The returned ack frame is
-        lazy; the caller (foreachBatch) decides where acks/dead letters
-        go.
+        A local input (``df.isLocal()``, e.g. a replay group built with
+        ``local_frame``) is already in driver memory: it is sent
+        in-process during this call, with no Spark job, and the acks
+        come back as a local frame. Any other frame is sent on executors
+        via mapInPandas — each partition opens its own transport and
+        streams its chunks — and its ack frame is lazy; the caller
+        (foreachBatch) decides where acks/dead letters go.
         """
         data = F.col(data_col) if isinstance(data_col, str) else data_col
         key = F.col(partition_key_col) if isinstance(partition_key_col, str) else partition_key_col
         src = df.select(data.cast("binary").alias("_data"), key.cast("string").alias("_key"))
-        if self.repartition_by_key:
-            src = src.repartition("_key")
 
         sink = self
+
+        def ack(entries: list[tuple]) -> list[dict]:
+            # Null data or partition key cannot be sent (and used to
+            # crash the task — under exactly_once that wedges the
+            # stream in a replay loop on the same epoch): route such
+            # records straight to dead-letter acks instead.
+            valid = [
+                (i, {"Data": bytes(d), "PartitionKey": k})
+                for i, (d, k) in enumerate(entries)
+                if d is not None and k is not None
+            ]
+            acks_by_i: dict[int, dict] = {}
+            if valid:
+                sent = sink.send_partition([r for _, r in valid])
+                for (i, _), a in zip(valid, sent):
+                    acks_by_i[i] = a
+            for i, (d, k) in enumerate(entries):
+                if i not in acks_by_i:
+                    acks_by_i[i] = {
+                        "partition_key": k,
+                        "data_md5": None,
+                        "status": "dead_letter",
+                        "attempts": 0,
+                        "error_code": "NullRecord",
+                        "sequence_number": None,
+                        "shard_id": None,
+                    }
+            return [acks_by_i[i] for i in range(len(entries))]
+
+        if df.isLocal():
+            # a projection over a local relation folds into it: no job
+            return local_frame(df.sparkSession, ack(src.collect()), ACK_SCHEMA)
+        if self.repartition_by_key:
+            src = src.repartition("_key")
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 entries = list(zip(pdf["_data"], pdf["_key"]))
-                if not entries:
-                    continue
-                # Null data or partition key cannot be sent (and used to
-                # crash the task — under exactly_once that wedges the
-                # stream in a replay loop on the same epoch): route such
-                # records straight to dead-letter acks instead.
-                valid = [
-                    (i, {"Data": bytes(d), "PartitionKey": k})
-                    for i, (d, k) in enumerate(entries)
-                    if d is not None and k is not None
-                ]
-                acks_by_i: dict[int, dict] = {}
-                if valid:
-                    sent = sink.send_partition([r for _, r in valid])
-                    for (i, _), a in zip(valid, sent):
-                        acks_by_i[i] = a
-                for i, (d, k) in enumerate(entries):
-                    if i not in acks_by_i:
-                        acks_by_i[i] = {
-                            "partition_key": k,
-                            "data_md5": None,
-                            "status": "dead_letter",
-                            "attempts": 0,
-                            "error_code": "NullRecord",
-                            "sequence_number": None,
-                            "shard_id": None,
-                        }
-                yield pd.DataFrame(
-                    [acks_by_i[i] for i in range(len(entries))],
-                    columns=ACK_SCHEMA.fieldNames(),
-                )
+                if entries:
+                    yield pd.DataFrame(ack(entries), columns=ACK_SCHEMA.fieldNames())
 
         return src.mapInPandas(run, ACK_SCHEMA)
 

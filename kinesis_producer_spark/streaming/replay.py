@@ -29,6 +29,11 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+_GROUP_SCHEMA = T.StructType(
+    [T.StructField("data", T.BinaryType()), T.StructField("partition_key", T.StringType())]
+)
 
 
 def event_time_batches(
@@ -94,30 +99,33 @@ def replay_to_kinesis(
 ) -> DataFrame:
     """Batch-mode paced replay through a KinesisSink.
 
-    Pacing happens between event-time groups; each group is sent as one
-    distributed write (the sink chunks per the API limits). Returns the
-    union of ack frames… materialized per batch, so acks are collected
-    incrementally — suitable for moderate batch counts; use
-    ``foreachBatch`` streaming for unbounded replay.
+    Pacing happens between event-time groups. Each group already sits on
+    the driver (``toLocalIterator``), so it is handed to
+    ``sink.write_batch`` as a local frame and sent in-process: no Spark
+    job per group, only the one sorted scan that forms the groups. Acks
+    are collected per group; the returned ack frame is local too, so
+    collecting it launches no job. Suitable for moderate batch counts;
+    use ``foreachBatch`` streaming for unbounded replay.
     """
+    from kinesis_producer_spark.streaming.kinesis_sink import ACK_SCHEMA, local_frame
+
     key = F.col(partition_key) if isinstance(partition_key, str) else partition_key
     prepared = df.select(
-        F.col(ts_col).alias("ts"), F.col(payload_col).alias("payload"), key.alias("partition_key")
+        F.col(ts_col).alias("ts"),
+        F.col(payload_col).cast("binary").alias("data"),
+        key.cast("string").alias("partition_key"),
     )
     batches = (
         prepared.groupBy("ts")
-        .agg(F.collect_list(F.struct("payload", "partition_key")).alias("payloads"))
+        .agg(F.collect_list(F.struct("data", "partition_key")).alias("payloads"))
         .orderBy("ts")
     )
     spark = df.sparkSession
     acks: list = []
 
     def produce(ts, payloads) -> None:
-        rows = [(bytes(p["payload"], "utf-8") if isinstance(p["payload"], str) else p["payload"], p["partition_key"]) for p in payloads]
-        bdf = spark.createDataFrame(rows, "data binary, partition_key string")
-        acks.extend(sink.write_batch(bdf).collect())
+        group = local_frame(spark, [p.asDict() for p in payloads], _GROUP_SCHEMA)
+        acks.extend(r.asDict() for r in sink.write_batch(group).collect())
 
     replay(batches, produce, speedup=speedup, max_sleep_s=max_sleep_s)
-    from kinesis_producer_spark.streaming.kinesis_sink import ACK_SCHEMA
-
-    return spark.createDataFrame(acks, ACK_SCHEMA)
+    return local_frame(spark, acks, ACK_SCHEMA)

@@ -69,3 +69,26 @@ def duck():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_ORACLE}/{t}.parquet')")
     yield con
     con.close()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a fresh job group and returns
+    ``(result, number of Spark jobs it launched)``."""
+    import time
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{time.time_ns()}"
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status tracker is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

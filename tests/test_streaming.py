@@ -1017,6 +1017,63 @@ def test_null_records_dead_letter_instead_of_crashing(spark):
         assert a.error_code == "NullRecord" and a.sequence_number is None
 
 
+
+_NULL_ROWS = [("ok-payload", "k"), (None, "k"), ("x", None), ("ok2", "k2")]
+
+
+def _ack_fields(rows) -> list[tuple]:
+    return sorted(
+        (a.partition_key or "", a.data_md5 or "", a.status, a.attempts, a.error_code or "")
+        for a in rows
+    )
+
+
+def test_write_batch_local_frame_matches_distributed(spark):
+    """A driver-resident (local) frame is sent in-process; its acks —
+    including the NullRecord dead letters — equal the mapInPandas path's
+    acks on the same rows."""
+    from kinesis_producer_spark.streaming.kinesis_sink import local_frame
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [T.StructField("data", T.StringType()), T.StructField("partition_key", T.StringType())]
+    )
+    sink = KinesisSink(
+        "s", lambda: RecordingTransport(fail_first_attempt_prefix="zz"), backoff_s=0.0
+    )
+    local = local_frame(spark, [dict(zip(("data", "partition_key"), r)) for r in _NULL_ROWS], schema)
+    distributed = spark.createDataFrame(_NULL_ROWS, schema)
+    assert local.isLocal() and not distributed.isLocal()
+    got_local = sink.write_batch(local)
+    assert got_local.isLocal()
+    local_acks = _ack_fields(got_local.collect())
+    assert local_acks == _ack_fields(sink.write_batch(distributed).collect())
+    assert [a[2:] for a in local_acks].count(("dead_letter", 0, "NullRecord")) == 2
+    assert [a[2] for a in local_acks].count("ok") == 2
+
+
+def test_write_batch_local_frame_launches_no_job(spark, count_jobs):
+    """The local path sends during write_batch and its acks are a local
+    frame: sending and collecting them launch 0 Spark jobs."""
+    from kinesis_producer_spark.streaming.kinesis_sink import local_frame
+    from kinesis_producer_spark.streaming.replay import _GROUP_SCHEMA
+
+    transports: list[RecordingTransport] = []
+
+    def factory():
+        transports.append(RecordingTransport(fail_first_attempt_prefix="zz"))
+        return transports[-1]
+
+    sink = KinesisSink("s", factory, backoff_s=0.0)
+    rows = [{"data": f"p{i}".encode(), "partition_key": f"k{i % 3}"} for i in range(50)]
+    group = local_frame(spark, rows, _GROUP_SCHEMA)
+    acks, jobs = count_jobs(lambda: sink.write_batch(group).collect())
+    assert jobs == 0
+    assert len(acks) == 50 and all(a.status == "ok" for a in acks)
+    # sent during the call, in this process
+    assert sum(len(c) for t in transports for c in t.calls) == 50
+
+
 def test_streaming_lsh_epoch_aging_bounds_state(spark, tmp_path):
     """Epoch-keyed streaming LSH (round-5: state aging). Three epochs
     arrive in event-time order; once the watermark passes an epoch's
