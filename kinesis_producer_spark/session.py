@@ -1,9 +1,10 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]`` in a single JVM; the
-same configuration keys are the ones that matter on a 1000-executor
-cluster (AQE, shuffle partitioning, Arrow, partition sizing), so tests
-exercise the real knobs.
+Local testing runs ``local[$SPARK_GRAFT_CPUS]`` in a single JVM
+(default: the cores this process may run on, with a driver of at most
+half the host's physical RAM); the same configuration keys are the ones
+that matter on a 1000-executor cluster (AQE, shuffle partitioning,
+Arrow, partition sizing), so tests exercise the real knobs.
 """
 
 from __future__ import annotations
@@ -83,6 +84,25 @@ def streaming_state_profile() -> dict[str, str]:
     }
 
 
+_DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def _host_driver_memory(phys_bytes: int | None = None) -> str:
+    """Half of physical RAM (default: this host's), capped at 16g —
+    the driver JVM shares the host with its Python workers."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(_DRIVER_MEM_CAP_MB, phys_bytes // 2 // 2**20)}m"
+
+
+def _session_sizing(cpus: int | None = None) -> tuple[int, str]:
+    """``(local cores, spark.driver.memory)``: an explicit ``cpus``,
+    else ``SPARK_GRAFT_CPUS``, else the cores this process may run on;
+    ``SPARK_GRAFT_DRIVER_MEM``, else ``_host_driver_memory()``."""
+    n = int(cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    return n, os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_memory()
+
+
 def get_spark(
     app_name: str = "kinesis_producer_spark",
     cpus: int | None = None,
@@ -98,7 +118,7 @@ def get_spark(
     - UTC session timezone: required for byte-identical comparison with
       the DuckDB oracle (DuckDB timestamps are UTC-naive).
     """
-    n = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n, driver_mem = _session_sizing(cpus)
     shuffle = int(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", str(2 * n)))
 
     builder = (
@@ -112,7 +132,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", str(_MAX_PARTITION_BYTES))
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # fixture events.parquet stores ts as TIMESTAMP(NANOS); Spark has no

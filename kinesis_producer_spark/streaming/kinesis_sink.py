@@ -43,6 +43,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from kinesis_producer_spark.observability import observe
+
 MAX_RECORDS_PER_CALL = 500
 MAX_BYTES_PER_CALL = 5 * 1024 * 1024
 MAX_BYTES_PER_RECORD = 1024 * 1024
@@ -230,18 +232,20 @@ class ShardMap:
         return child.shard_id
 
 
-class RecordingTransport(Transport):
-    """Deterministic in-process mock.
-
-    Failure injection: a record fails with
-    ``ProvisionedThroughputExceededException`` on attempts ≤
-    ``fail_attempts_for(record)``; by default records whose data-md5
-    starts with '0' fail exactly once (≈1/16 of traffic), so retry
-    logic is exercised deterministically. Shard assignment follows the
-    public hash-range contract via ``ShardMap`` (default: ``uniform(
-    n_shards)`` — for n dividing 16, the shard index is the md5's
-    first hex digit scaled by n/16, reproducible in SQL for the
-    oracle). Pass a shared ``shard_map`` to model resharding.
+class MockKinesisService(Transport):
+    """The mock Kinesis service's ``put_records`` admission, shared by
+    the in-process (``RecordingTransport``) and the persisted
+    (``kinesis_source.FileStreamTransport``) mocks: the API's per-call
+    count and byte limits, shard routing by the public hash-range
+    contract via ``ShardMap`` (default: ``uniform(n_shards)`` — for n
+    dividing 16, the shard index is the md5's first hex digit scaled by
+    n/16, reproducible in SQL for the oracle; pass a shared
+    ``shard_map`` to model resharding), and deterministic failure
+    injection: by default a record whose data-md5 starts with
+    ``fail_first_attempt_prefix`` fails with
+    ``ProvisionedThroughputExceededException`` on its first attempt
+    (≈1/16 of traffic for '0'), so retry logic is exercised
+    deterministically.
     """
 
     def __init__(
@@ -259,7 +263,6 @@ class RecordingTransport(Transport):
         # internal / validation); None keeps the legacy default
         # (throughput-exceeded once for '0'-prefixed md5s).
         self.error_schedule = error_schedule
-        self.calls: list[list[dict]] = []
         self._attempts: dict[str, int] = {}
 
     def _injected_error(self, md5: str, n: int) -> str | None:
@@ -269,35 +272,56 @@ class RecordingTransport(Transport):
             return "ProvisionedThroughputExceededException"
         return None
 
-    def put_records(self, stream_name: str, records: list[dict]) -> dict:
+    def _admit(self, records: list[dict]) -> list[tuple[str, str | None]]:
+        """Check the call limits and count one attempt per record;
+        return each record's (data md5, injected ErrorCode or None)."""
         if len(records) > MAX_RECORDS_PER_CALL:
             raise ValueError(f"put_records: {len(records)} records > {MAX_RECORDS_PER_CALL}")
         total = sum(len(r["Data"]) + len(r["PartitionKey"].encode()) for r in records)
         if total > MAX_BYTES_PER_CALL:
             raise ValueError(f"put_records: {total} bytes > {MAX_BYTES_PER_CALL}")
-        self.calls.append(records)
-        out, failed = [], 0
+        out = []
         for r in records:
             md5 = hashlib.md5(r["Data"]).hexdigest()
             n = self._attempts.get(md5, 0) + 1
             self._attempts[md5] = n
-            code = self._injected_error(md5, n)
-            if code is not None:
-                failed += 1
-                out.append(
-                    {
-                        "ErrorCode": code,
-                        "ErrorMessage": f"{code} (injected)",
-                    }
-                )
-            else:
-                out.append(
-                    {
-                        "SequenceNumber": f"seq-{md5[:12]}",
-                        "ShardId": self.shard_map.shard_for_key(r["PartitionKey"]),
-                    }
-                )
-        return {"FailedRecordCount": failed, "Records": out}
+            out.append((md5, self._injected_error(md5, n)))
+        return out
+
+    @staticmethod
+    def _failure(code: str) -> dict:
+        return {"ErrorCode": code, "ErrorMessage": f"{code} (injected)"}
+
+    @staticmethod
+    def _response(entries: list[dict]) -> dict:
+        return {
+            "FailedRecordCount": sum("ErrorCode" in e for e in entries),
+            "Records": entries,
+        }
+
+
+class RecordingTransport(MockKinesisService):
+    """Deterministic in-process mock (``MockKinesisService``'s
+    arguments) that also records every call's records in ``calls``."""
+
+    def __init__(self, *args, **kwargs):
+        super().__init__(*args, **kwargs)
+        self.calls: list[list[dict]] = []
+
+    def put_records(self, stream_name: str, records: list[dict]) -> dict:
+        admitted = self._admit(records)
+        self.calls.append(records)
+        return self._response(
+            [
+                self._failure(code)
+                if code is not None
+                else {
+                    "SequenceNumber": f"seq-{md5[:12]}",
+                    "ShardId": self.shard_map.shard_for_key(r["PartitionKey"]),
+                }
+                for r, (md5, code) in zip(records, admitted)
+            ]
+        )
 
 
 class KinesisTransport(Transport):
@@ -510,6 +534,33 @@ IMMEDIATE_RETRY_CODES = frozenset({"InternalFailure", "ServiceUnavailableExcepti
 RETRYABLE_CODES = BACKOFF_RETRY_CODES | IMMEDIATE_RETRY_CODES
 
 
+def _ledger_counters() -> list[Column]:
+    """The ``_sink_metrics`` ledger's per-epoch delivery counters, as
+    aggregates over ack rows (``attempts_total`` is 0 for no rows)."""
+    ok = F.col("status") == "ok"
+    dead = F.col("status") == "dead_letter"
+    code = F.col("error_code")
+
+    def n(cond: Column, name: str) -> Column:
+        return F.count(F.when(cond, 1)).alias(name)
+
+    return [
+        n(ok, "sent"),
+        n(ok & (F.col("attempts") > 1), "retried"),
+        n(dead, "dead_lettered"),
+        n(code == "NullRecord", "null_records"),
+        F.coalesce(F.sum("attempts"), F.lit(0)).alias("attempts_total"),
+        # dead letters by error class: throttle/internal deaths
+        # exhausted their retries; terminal deaths were never retried
+        n(code.isin(list(BACKOFF_RETRY_CODES)), "dead_throttle"),
+        n(code.isin(list(IMMEDIATE_RETRY_CODES)), "dead_internal"),
+        n(
+            dead & ~F.coalesce(code.isin([*RETRYABLE_CODES, "NullRecord"]), F.lit(False)),
+            "dead_terminal",
+        ),
+    ]
+
+
 @dataclass
 class KinesisSink:
     """foreachBatch-compatible writer with ack/retry/dead-letter.
@@ -686,13 +737,15 @@ class KinesisSink:
         scheme while acks went remote, splitting the ledger from the
         data. Rejected up front instead.
 
-        Layout migration (round 5): ack rows are now written
-        PARTITIONED BY epoch (``epoch=N/`` subdirs). A pre-round-5
+        Ack layout: rows are written PARTITIONED BY epoch (``epoch=N/``
+        subdirs) with an ``attempt`` id column, which tells a crashed
+        attempt's leftover rows apart from the replay's. The per-epoch
+        ``_sink_metrics`` row is counted on that same write (an
+        Observation), so the sink never reads its acks back, and an
+        epoch with no rows still gets an all-zero row. A pre-round-5
         ack_path holding flat unpartitioned parquet files can still be
-        appended to — the metrics reader scans only this epoch's
-        partition directory (explicit ``basePath``), never the mixed
-        root — but a plain ``spark.read.parquet(ack_path)`` over such
-        a mixed directory fails with conflicting structures; read
+        appended to, but a plain ``spark.read.parquet(ack_path)`` over
+        such a mixed directory fails with conflicting structures; read
         legacy dirs with ``option("basePath", ...)`` on the partition
         subdirs, or re-write them once.
 
@@ -739,32 +792,28 @@ class KinesisSink:
                 if ack_path:
                     import uuid
 
-                    # every write attempt gets its own id: a crashed
-                    # uncommitted epoch leaves its ack rows behind (the
-                    # documented at-least-once tail), and the metrics
-                    # for the replay must count ONLY the replay's rows —
-                    # filtering on epoch alone double-counted (found in
-                    # round-5 review). Partitioning by epoch keeps the
-                    # per-epoch metric scan to one partition instead of
-                    # the whole ack history.
+                    # every write attempt gets its own id, so the ack
+                    # log tells a crashed uncommitted attempt's leftover
+                    # rows (the documented at-least-once tail) apart
+                    # from the replay's. The ledger counters ride the
+                    # ack write as an Observation: re-aggregating the
+                    # lazy `acks` frame would re-execute the mapInPandas
+                    # stage and RE-SEND the batch.
                     attempt_id = uuid.uuid4().hex
+                    observed, obs = observe(
+                        acks, f"kinesis_sink-epoch-{epoch_id}-{attempt_id}", *_ledger_counters()
+                    )
                     (
-                        acks.withColumn("epoch", F.lit(epoch_id))
+                        observed.withColumn("epoch", F.lit(epoch_id))
                         .withColumn("attempt", F.lit(attempt_id))
                         .write.partitionBy("epoch")
                         .mode("append")
                         .parquet(ack_path)
                     )
-                    # per-epoch delivery counters for the monitor ledger
-                    # (streaming.monitor.sink_metrics). Counted from the
-                    # WRITTEN acks — re-aggregating the lazy `acks` frame
-                    # would re-execute the mapInPandas stage and RE-SEND
-                    # the batch. Written before the exactly-once marker,
-                    # so a replayed uncommitted epoch overwrites its own
-                    # row with the replay's counts.
-                    self._write_epoch_metrics(
-                        batch_df.sparkSession, ack_path, epoch_id, attempt_id
-                    )
+                    # written before the exactly-once marker, so a
+                    # replayed uncommitted epoch overwrites its own row
+                    # with the replay's counts
+                    self._write_epoch_metrics(ack_path, epoch_id, obs.get)
                 else:
                     acks.foreach(lambda _: None)  # force the send
                 if exactly_once and marker:
@@ -783,74 +832,16 @@ class KinesisSink:
         return write
 
     @staticmethod
-    def _write_epoch_metrics(spark, ack_path: str, epoch_id: int, attempt_id: str) -> None:
+    def _write_epoch_metrics(ack_path: str, epoch_id: int, counters: dict) -> None:
         """One JSON row of delivery counters per epoch under
         ``<ack_path>/_sink_metrics`` — the restart-surviving ledger the
-        monitor reads. The acks are epoch-partitioned; reading the
-        epoch's partition DIRECTORY (with basePath so the epoch column
-        survives) rather than filtering the root makes the prune
-        explicit AND keeps a mixed pre-round-5 ack_path readable — a
-        root scan over flat legacy files + epoch=N/ subdirs fails with
-        conflicting directory structures. The attempt filter keeps only
-        THIS write's rows (a crashed prior attempt's rows stay in the
-        ack log but must not double the ledger)."""
+        monitor reads — replaced atomically."""
         import json
         import os
 
-        row = (
-            spark.read.option("basePath", ack_path)
-            .parquet(os.path.join(ack_path, f"epoch={epoch_id}"))
-            .where(F.col("attempt") == attempt_id)
-            .agg(
-                F.count(F.when(F.col("status") == "ok", 1)).alias("sent"),
-                F.count(
-                    F.when((F.col("status") == "ok") & (F.col("attempts") > 1), 1)
-                ).alias("retried"),
-                F.count(F.when(F.col("status") == "dead_letter", 1)).alias(
-                    "dead_lettered"
-                ),
-                F.count(F.when(F.col("error_code") == "NullRecord", 1)).alias(
-                    "null_records"
-                ),
-                F.sum("attempts").alias("attempts_total"),
-                # dead-letter split by error class (round 6): throttle/
-                # internal deaths exhausted their retries; terminal
-                # deaths were never retried by policy
-                F.count(
-                    F.when(F.col("error_code").isin(list(BACKOFF_RETRY_CODES)), 1)
-                ).alias("dead_throttle"),
-                F.count(
-                    F.when(F.col("error_code").isin(list(IMMEDIATE_RETRY_CODES)), 1)
-                ).alias("dead_internal"),
-                F.count(
-                    F.when(
-                        (F.col("status") == "dead_letter")
-                        & ~F.coalesce(
-                            F.col("error_code").isin(
-                                list(RETRYABLE_CODES) + ["NullRecord"]
-                            ),
-                            F.lit(False),
-                        ),
-                        1,
-                    )
-                ).alias("dead_terminal"),
-            )
-            .collect()[0]
-        )
         mdir = os.path.join(ack_path, "_sink_metrics")
         os.makedirs(mdir, exist_ok=True)
-        payload = {
-            "epoch": epoch_id,
-            "sent": row["sent"],
-            "retried": row["retried"],
-            "dead_lettered": row["dead_lettered"],
-            "null_records": row["null_records"],
-            "attempts_total": int(row["attempts_total"] or 0),
-            "dead_throttle": row["dead_throttle"],
-            "dead_internal": row["dead_internal"],
-            "dead_terminal": row["dead_terminal"],
-        }
         tmp = os.path.join(mdir, f".epoch-{epoch_id}.tmp")
         with open(tmp, "w") as fh:
-            json.dump(payload, fh)
+            json.dump({"epoch": epoch_id, **counters}, fh)
         os.replace(tmp, os.path.join(mdir, f"epoch-{epoch_id}.json"))

@@ -50,7 +50,6 @@ epoch ledger.
 from __future__ import annotations
 
 import base64
-import hashlib
 import json
 import os
 import uuid
@@ -58,12 +57,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_producer_spark.streaming.kinesis_sink import (
-    MAX_BYTES_PER_CALL,
-    MAX_RECORDS_PER_CALL,
-    ShardMap,
-    Transport,
-)
+from kinesis_producer_spark.streaming.kinesis_sink import MockKinesisService, ShardMap
 
 _TOPOLOGY = "_topology.json"
 _BLOCK_W = 8  # block index width; fixed width keeps lexicographic = numeric
@@ -79,15 +73,15 @@ def _seq(block: int, i: int) -> str:
     return f"{block:0{_BLOCK_W}d}.{i:0{_IDX_W}d}"
 
 
-class FileStreamTransport(Transport):
+class FileStreamTransport(MockKinesisService):
     """``RecordingTransport``'s semantics with a PERSISTED stream: the
-    mock of the Kinesis service's shard storage. Same deterministic
-    failure injection (md5-prefix throttle on first attempt), same
-    hash-range routing via ``ShardMap`` — but successful records are
-    appended durably under ``<stream_dir>/<shard_id>/block-N.jsonl``
-    with per-shard sequence numbers, so a CONSUMER can read the stream
-    back. Safe for concurrent executor tasks: see the module docstring
-    for the atomic block-publish protocol."""
+    mock of the Kinesis service's shard storage. Same limits, routing
+    and failure injection (``MockKinesisService``) — but successful
+    records are appended durably under
+    ``<stream_dir>/<shard_id>/block-N.jsonl`` with per-shard sequence
+    numbers, so a CONSUMER can read the stream back. Safe for
+    concurrent executor tasks: see the module docstring for the atomic
+    block-publish protocol."""
 
     def __init__(
         self,
@@ -96,12 +90,8 @@ class FileStreamTransport(Transport):
         fail_first_attempt_prefix: str = "0",
         shard_map: ShardMap | None = None,
     ):
+        super().__init__(n_shards, fail_first_attempt_prefix, shard_map)
         self.stream_dir = stream_dir
-        self.fail_prefix = fail_first_attempt_prefix
-        self.shard_map = (
-            shard_map if shard_map is not None else ShardMap.uniform(n_shards)
-        )
-        self._attempts: dict[str, int] = {}
         os.makedirs(stream_dir, exist_ok=True)
         self.sync_topology()
 
@@ -151,27 +141,12 @@ class FileStreamTransport(Transport):
         return k
 
     def put_records(self, stream_name: str, records: list[dict]) -> dict:
-        if len(records) > MAX_RECORDS_PER_CALL:
-            raise ValueError(
-                f"put_records: {len(records)} records > {MAX_RECORDS_PER_CALL}"
-            )
-        total = sum(
-            len(r["Data"]) + len(r["PartitionKey"].encode()) for r in records
-        )
-        if total > MAX_BYTES_PER_CALL:
-            raise ValueError(
-                f"put_records: {total} bytes > {MAX_BYTES_PER_CALL}"
-            )
-        # route + inject failures first; only successes land durably
+        admitted = self._admit(records)
+        # only successes land durably
         landing: dict[str, list[dict]] = {}
         slots: list[tuple[str, int] | None] = []
-        failed = 0
-        for r in records:
-            md5 = hashlib.md5(r["Data"]).hexdigest()
-            n = self._attempts.get(md5, 0) + 1
-            self._attempts[md5] = n
-            if md5.startswith(self.fail_prefix) and n == 1:
-                failed += 1
+        for r, (_, code) in zip(records, admitted):
+            if code is not None:
                 slots.append(None)
                 continue
             sid = self.shard_map.shard_for_key(r["PartitionKey"])
@@ -188,26 +163,14 @@ class FileStreamTransport(Transport):
             sid: self._publish_block(sid, rows)
             for sid, rows in landing.items()
         }
-        out = []
-        for slot in slots:
-            if slot is None:
-                out.append(
-                    {
-                        "ErrorCode": "ProvisionedThroughputExceededException",
-                        "ErrorMessage": (
-                            "ProvisionedThroughputExceededException (injected)"
-                        ),
-                    }
-                )
-            else:
-                sid, i = slot
-                out.append(
-                    {
-                        "SequenceNumber": _seq(blocks[sid], i),
-                        "ShardId": sid,
-                    }
-                )
-        return {"FailedRecordCount": failed, "Records": out}
+        return self._response(
+            [
+                self._failure(code)
+                if slot is None
+                else {"SequenceNumber": _seq(blocks[slot[0]], slot[1]), "ShardId": slot[0]}
+                for slot, (_, code) in zip(slots, admitted)
+            ]
+        )
 
 
 def load_topology(stream_dir: str) -> dict:

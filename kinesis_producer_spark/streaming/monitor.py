@@ -92,9 +92,13 @@ def sink_metrics(spark: SparkSession, ack_path: str) -> DataFrame:
     only derivable from ack rows before).
 
     The ledger is JSON-per-epoch under ``<ack_path>/_sink_metrics``,
-    written by ``KinesisSink.foreach_batch_writer`` — files, not
-    process memory, so a restarted query keeps appending to the same
-    ledger and the counters accumulate across restarts."""
+    written by ``KinesisSink.foreach_batch_writer`` from an Observation
+    on the epoch's ack write (the same Spark job, no re-read), before
+    the exactly-once marker: a replayed uncommitted epoch replaces its
+    row with the replay's counts, and an epoch with no rows gets an
+    all-zero row. Files, not process memory, so a restarted query
+    keeps appending to the same ledger and the counters accumulate
+    across restarts."""
     import os
 
     mdir = os.path.join(ack_path, "_sink_metrics")

@@ -448,6 +448,28 @@ def test_s3_tuning_profile_contract():
     assert "PathOutputCommitProtocol" in c["spark.sql.sources.commitProtocolClass"]
 
 
+def test_session_sizing_follows_host_and_overrides(monkeypatch):
+    """Session defaults fit the host: the cores this process may run on
+    and half of physical RAM capped at 16g; an explicit ``cpus``,
+    SPARK_GRAFT_CPUS and SPARK_GRAFT_DRIVER_MEM still win."""
+    from kinesis_producer_spark.session import _host_driver_memory, _session_sizing
+
+    gib = 2**30
+    assert _host_driver_memory(15 * gib) == "7680m"
+    assert _host_driver_memory(32 * gib) == "16384m"
+    assert _host_driver_memory(256 * gib) == "16384m"
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert _session_sizing() == (len(os.sched_getaffinity(0)), _host_driver_memory())
+    assert _session_sizing(3)[0] == 3
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert _session_sizing() == (5, "2g")
+    assert _session_sizing(3) == (3, "2g")
+
+
 def test_multiprobe_recovers_boundary_neighbors(spark):
     """A neighbor one sign-flip across the quantization boundary is
     invisible to single-probe IVF but found by multi-probe."""

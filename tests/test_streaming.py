@@ -1571,6 +1571,59 @@ def test_sink_metrics_replayed_epoch_does_not_double_count(spark, tmp_path):
     assert m[7].attempts_total == 40
 
 
+def test_exactly_once_empty_epoch_commits_zero_ledger_row(spark, tmp_path):
+    """An epoch whose rows are all filtered out writes no epoch=N/ ack
+    partition; it must still commit with an all-zero ledger row instead
+    of failing — under exactly_once a failure re-raises, and every
+    restart would replay the same epoch and fail again."""
+    import json
+
+    from kinesis_producer_spark.streaming.kinesis_sink import (
+        KinesisSink,
+        RecordingTransport,
+    )
+
+    src = str(tmp_path / "empty_src")
+    ack_path = tmp_path / "empty_acks"
+    ckpt = str(tmp_path / "empty_ckpt")
+    spark.createDataFrame(
+        [(bytearray(b"evt-%d" % i), f"k{i}") for i in range(16)],
+        "data binary, partition_key string",
+    ).coalesce(1).write.parquet(src)
+    sink = KinesisSink("s", RecordingTransport, backoff_s=0.0)
+    writer = sink.foreach_batch_writer(ack_path=str(ack_path), exactly_once=True)
+
+    def run():
+        stream = (
+            spark.readStream.schema("data binary, partition_key string")
+            .parquet(src)
+            .where("partition_key = 'no-such-key'")
+        )
+        q = (
+            stream.writeStream.foreachBatch(writer)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert not q.isActive and q.exception() is None
+
+    run()
+    run()  # restart from the checkpoint
+    with open(ack_path / "_sink_metrics" / "epoch-0.json") as fh:
+        row = json.load(fh)
+    assert row == {
+        "epoch": 0,
+        **dict.fromkeys(
+            "sent retried dead_lettered null_records attempts_total "
+            "dead_throttle dead_internal dead_terminal".split(),
+            0,
+        ),
+    }
+    assert (ack_path / "_epoch_ledger" / "epoch-0").exists()
+    assert not (ack_path / "epoch=0").exists()
+
+
 def test_streaming_kmv_matches_batch_and_is_replay_idempotent(spark, tmp_path):
     """The third streaming-sketch contract (after CMS add-merge and HLL
     max-merge): per-segment KMV state holds exactly the k smallest
@@ -1724,10 +1777,10 @@ def test_ack_path_remote_scheme_rejected_and_file_scheme_stripped(spark, tmp_pat
 def test_mixed_legacy_ack_layout_still_writes_metrics(spark, tmp_path):
     """A pre-round-5 ack_path holds flat unpartitioned parquet at the
     root; round-5+ appends epoch=N/ partition dirs next to them. The
-    per-epoch metrics read must scan ONLY the new epoch's partition
-    directory — a root scan over the mixed layout fails with
-    conflicting directory structures, which is exactly the regression
-    this pins."""
+    sink must keep appending to such a directory and writing its
+    per-epoch ledger row, and the new epoch's partition must read clean
+    with basePath (a plain root scan over the mixed layout fails with
+    conflicting directory structures)."""
     from kinesis_producer_spark.streaming import monitor
     from kinesis_producer_spark.streaming.kinesis_sink import (
         KinesisSink,
@@ -1901,9 +1954,11 @@ def test_retry_policy_throttle_backs_off_and_mixed_classes_split():
     assert n_validate_sends == 1
 
 
-def test_sink_metrics_ledger_splits_dead_letters_by_class(spark, tmp_path):
+def test_sink_metrics_ledger_splits_dead_letters_by_class(spark, tmp_path, count_jobs):
     """The per-epoch ledger splits dead letters into throttle /
-    internal / terminal classes (plus the existing NullRecord count)."""
+    internal / terminal classes (plus the existing NullRecord count),
+    and is counted on the ack write itself: the epoch is one Spark job,
+    with no re-read of the acks it just wrote."""
     from kinesis_producer_spark.streaming import monitor
     from kinesis_producer_spark.streaming.kinesis_sink import (
         KinesisSink,
@@ -1932,7 +1987,8 @@ def test_sink_metrics_ledger_splits_dead_letters_by_class(spark, tmp_path):
         + [(None, "nullkey")],
         "data binary, partition_key string",
     )
-    write(batch, 0)
+    _, jobs = count_jobs(lambda: write(batch, 0))
+    assert jobs == 1
     (m,) = monitor.sink_metrics(spark, ack_path).collect()
     acks = spark.read.option("basePath", ack_path).parquet(f"{ack_path}/epoch=0")
     by_code = {
