@@ -5,6 +5,13 @@ Local testing runs ``local[$SPARK_GRAFT_CPUS]`` in a single JVM
 half the host's physical RAM); the same configuration keys are the ones
 that matter on a 1000-executor cluster (AQE, shuffle partitioning,
 Arrow, partition sizing), so tests exercise the real knobs.
+
+Python workers fork from ``kinesis_producer_spark.worker_daemon``
+(``spark.python.daemon.module``), which stops each task from re-reading
+Spark's zip archives on CPython < 3.12. Spark finds that module through
+the package root, which ``get_spark`` prepends to
+``spark.executorEnv.PYTHONPATH``; the same entry lets the workers
+import this package whatever the driver's working directory.
 """
 
 from __future__ import annotations
@@ -16,6 +23,8 @@ from pyspark.sql import SparkSession
 # 128 MB input split — same constant the reference uses for its greedy
 # input batching (reference aws_utils.py:27, max_batch_size=128_000_000).
 _MAX_PARTITION_BYTES = 128 * 1024 * 1024
+
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def s3_tuning_profile(connection_pool: int = 50) -> dict[str, str]:
@@ -117,6 +126,12 @@ def get_spark(
     - Arrow on: all pandas-UDF operators move data in columnar batches.
     - UTC session timezone: required for byte-identical comparison with
       the DuckDB oracle (DuckDB timestamps are UTC-naive).
+    - Python workers fork from ``worker_daemon``, which skips re-reading
+      unchanged zip archives before each task. The package root is
+      prepended to ``spark.executorEnv.PYTHONPATH`` (ahead of any value
+      in ``extra_conf``) so that the daemon and the workers import this
+      package; the session is always ``local[n]``, so that path is valid
+      for every worker.
     """
     n, driver_mem = _session_sizing(cpus)
     shuffle = int(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", str(2 * n)))
@@ -138,11 +153,18 @@ def get_spark(
         # fixture events.parquet stores ts as TIMESTAMP(NANOS); Spark has no
         # nanos timestamp — read as long, tables.py converts to micros.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.python.daemon.module", "kinesis_producer_spark.worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # getOrCreate may return a session built elsewhere, which ignores the
+    # static confs above (daemon module, executor PYTHONPATH)
     _ship_package(spark)
     return spark
 
@@ -162,12 +184,11 @@ def _ship_package(spark: SparkSession) -> None:
     import shutil
     import tempfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_base = os.path.join(
         tempfile.gettempdir(), f"kinesis_producer_spark_pkg_{os.getpid()}"
     )
     zip_path = shutil.make_archive(
-        zip_base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="kinesis_producer_spark"
+        zip_base, "zip", root_dir=_PACKAGE_ROOT, base_dir="kinesis_producer_spark"
     )
     sc.addPyFile(zip_path)
     sc._kps_shipped = True

@@ -53,7 +53,7 @@ def fixture_invariants():
 def spark():
     from kinesis_producer_spark.session import get_spark
 
-    spark = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("tests")
     yield spark
     spark.stop()
 

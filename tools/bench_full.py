@@ -31,7 +31,7 @@ def main() -> int:
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     queries, _ = load_all()
-    spark = get_spark("bench_full", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("bench_full")
     spark.sparkContext.setLogLevel("ERROR")
 
     times: dict[str, float] = {}

@@ -50,7 +50,7 @@ def main() -> int:
 
     only = set(sys.argv[1:])
     queries, oracle = load_all()
-    spark = get_spark("oracle_check", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("oracle_check")
     con = connect_duckdb()
 
     n_pass = n_fail = 0

@@ -217,7 +217,6 @@ def main() -> int:
     os.environ["SPARK_GRAFT_UI"] = "true"
     spark = get_spark(
         "scale_soak",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.retainedStages": "40000",

@@ -54,7 +54,6 @@ def main() -> int:
     os.environ["SPARK_GRAFT_UI"] = "true"
     spark = get_spark(
         "shuffle_audit",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.retainedStages": "20000",
