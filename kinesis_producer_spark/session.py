@@ -170,22 +170,29 @@ def get_spark(
 
 
 def _ship_package(spark: SparkSession) -> None:
-    """Ship this package as a zip to executor Python workers.
+    """Ship this package as a zip to executor Python workers, unless
+    they already import it from the package root.
 
-    Driver-side imports resolve via cwd / caller ``sys.path``, but the
-    executor Python workers spawn with their own path and cannot
-    unpickle our pandas UDFs without the package. ``addPyFile`` is the
-    deployment-agnostic fix (works in local mode and on a real
-    cluster); idempotent per SparkContext.
+    A ``get_spark`` session has the root on its executors'
+    ``PYTHONPATH``. A session built elsewhere (one that ``getOrCreate``
+    returned, or a driver's own session under ``__spark_entry__``) does
+    not, and its workers cannot unpickle our pandas UDFs without the
+    package: ``addPyFile`` is the deployment-agnostic fix (local mode
+    and a real cluster alike). The zip is written inside the context's
+    SparkFiles directory, which Spark deletes when the context stops.
+    Idempotent per SparkContext.
     """
     sc = spark.sparkContext
-    if getattr(sc, "_kps_shipped", False):
+    executor_path = sc.getConf().get("spark.executorEnv.PYTHONPATH", "")
+    if getattr(sc, "_kps_shipped", False) or _PACKAGE_ROOT in executor_path.split(os.pathsep):
         return
     import shutil
     import tempfile
 
+    from pyspark import SparkFiles
+
     zip_base = os.path.join(
-        tempfile.gettempdir(), f"kinesis_producer_spark_pkg_{os.getpid()}"
+        tempfile.mkdtemp(dir=SparkFiles.getRootDirectory()), "kinesis_producer_spark"
     )
     zip_path = shutil.make_archive(
         zip_base, "zip", root_dir=_PACKAGE_ROOT, base_dir="kinesis_producer_spark"

@@ -4,11 +4,14 @@ The reference's producer (main.py:18-34) sends one ``put_records`` call
 per event-time batch from a single process, logs per-record failures,
 and drops the batch on error. This sink is the Spark-first rebuild:
 
-- runs inside ``writeStream.foreachBatch`` (or on any batch DataFrame),
-  sending **from executors in parallel** — each partition chunks its
-  records and calls the transport; nothing funnels through the driver.
-  A frame already in driver memory (a local relation, e.g. one replay
-  group) is sent in-process instead, with no Spark job;
+- runs inside ``writeStream.foreachBatch`` (or on any batch DataFrame).
+  A small frame is collected once and sent from the driver, in-process:
+  a local relation (e.g. one replay group, with no Spark job), or any
+  frame whose optimized-plan size estimate is within the session's
+  ``spark.sql.autoBroadcastJoinThreshold`` (Spark's own bound for
+  collecting a relation to the driver). A larger frame is sent **from
+  executors in parallel** — each partition chunks its records and calls
+  the transport — so a large batch never funnels through the driver;
 - respects the public AWS API limits by construction: ≤500 records and
   ≤5 MB per call, ≤1 MB per record (AWS service quotas — these bound
   the reference's ``put_records`` at main.py:20);
@@ -32,18 +35,19 @@ partition key to keep per-shard ordering while spreading load.
 from __future__ import annotations
 
 import hashlib
+import os
 import time
-from collections.abc import Callable, Iterator
+import uuid
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
-
-from kinesis_producer_spark.observability import observe
 
 MAX_RECORDS_PER_CALL = 500
 MAX_BYTES_PER_CALL = 5 * 1024 * 1024
@@ -534,31 +538,70 @@ IMMEDIATE_RETRY_CODES = frozenset({"InternalFailure", "ServiceUnavailableExcepti
 RETRYABLE_CODES = BACKOFF_RETRY_CODES | IMMEDIATE_RETRY_CODES
 
 
-def _ledger_counters() -> list[Column]:
-    """The ``_sink_metrics`` ledger's per-epoch delivery counters, as
-    aggregates over ack rows (``attempts_total`` is 0 for no rows)."""
-    ok = F.col("status") == "ok"
-    dead = F.col("status") == "dead_letter"
-    code = F.col("error_code")
+# the ``_sink_metrics`` ledger's per-epoch delivery counters, in the
+# order of its JSON rows
+LEDGER_FIELDS = (
+    "sent", "retried", "dead_lettered", "null_records",
+    "attempts_total", "dead_throttle", "dead_internal", "dead_terminal",
+)
+LEDGER_SCHEMA = T.StructType([T.StructField(f, T.LongType()) for f in LEDGER_FIELDS])
 
-    def n(cond: Column, name: str) -> Column:
-        return F.count(F.when(cond, 1)).alias(name)
+# an ack file's columns: the ack row plus the id of the write attempt
+ACK_FILE_SCHEMA = to_arrow_schema(ACK_SCHEMA).append(pa.field("attempt", pa.string()))
 
-    return [
-        n(ok, "sent"),
-        n(ok & (F.col("attempts") > 1), "retried"),
-        n(dead, "dead_lettered"),
-        n(code == "NullRecord", "null_records"),
-        F.coalesce(F.sum("attempts"), F.lit(0)).alias("attempts_total"),
+
+def _ledger(acks: list[dict]) -> dict[str, int]:
+    """The ledger's delivery counters over ack rows (all 0 for none)."""
+    c = dict.fromkeys(LEDGER_FIELDS, 0)
+    for a in acks:
+        ok, dead, code = a["status"] == "ok", a["status"] == "dead_letter", a["error_code"]
+        c["sent"] += ok
+        c["retried"] += ok and a["attempts"] > 1
+        c["dead_lettered"] += dead
+        c["null_records"] += code == "NullRecord"
+        c["attempts_total"] += a["attempts"]
         # dead letters by error class: throttle/internal deaths
         # exhausted their retries; terminal deaths were never retried
-        n(code.isin(list(BACKOFF_RETRY_CODES)), "dead_throttle"),
-        n(code.isin(list(IMMEDIATE_RETRY_CODES)), "dead_internal"),
-        n(
-            dead & ~F.coalesce(code.isin([*RETRYABLE_CODES, "NullRecord"]), F.lit(False)),
-            "dead_terminal",
-        ),
-    ]
+        c["dead_throttle"] += code in BACKOFF_RETRY_CODES
+        c["dead_internal"] += code in IMMEDIATE_RETRY_CODES
+        c["dead_terminal"] += dead and code not in RETRYABLE_CODES and code != "NullRecord"
+    return c
+
+
+def _write_acks(
+    batches: Iterable[list[dict]], ack_path: str | None, epoch_id: int, attempt_id: str, task: int
+) -> dict[str, int]:
+    """Count the ledger over one process's ack rows and, given an
+    ``ack_path``, write them to ``epoch=<epoch_id>/part-<attempt_id>-<task>.parquet``.
+
+    The file is written under a dot-prefixed temp name, which Spark and
+    pyarrow readers skip, and then ``os.replace``d into place: a reader
+    never sees a partial file, and a retried task replaces its own
+    file. No rows, no file."""
+    counters = dict.fromkeys(LEDGER_FIELDS, 0)
+    edir = os.path.join(ack_path or "", f"epoch={epoch_id}")
+    name = f"part-{attempt_id}-{task:05d}.parquet"
+    tmp = os.path.join(edir, f".{name}.{uuid.uuid4().hex}")
+    writer = None
+    try:
+        for acks in batches:
+            for k, v in _ledger(acks).items():
+                counters[k] += v
+            if not (ack_path and acks):
+                continue
+            if writer is None:
+                os.makedirs(edir, exist_ok=True)
+                writer = pq.ParquetWriter(tmp, ACK_FILE_SCHEMA)
+            rows = [dict(a, attempt=attempt_id) for a in acks]
+            writer.write_table(pa.Table.from_pylist(rows, schema=ACK_FILE_SCHEMA))
+        if writer is not None:
+            writer.close()
+            os.replace(tmp, os.path.join(edir, name))
+    finally:
+        if writer is not None and os.path.exists(tmp):  # failed before the replace
+            os.remove(tmp)
+            writer.close()
+    return counters
 
 
 @dataclass
@@ -639,6 +682,53 @@ class KinesisSink:
                 time.sleep(self.backoff_s * (2 ** (attempt - 1)))
         return [acks[i] for i in sorted(acks)]
 
+    def _send_entries(self, entries: list[tuple]) -> list[dict]:
+        """Send ``(data, partition key)`` entries; one ack row each, in order."""
+        # Null data or partition key cannot be sent (and used to crash
+        # the task — under exactly_once that wedges the stream in a
+        # replay loop on the same epoch): route such records straight to
+        # dead-letter acks instead.
+        valid = [
+            (i, {"Data": bytes(d), "PartitionKey": k})
+            for i, (d, k) in enumerate(entries)
+            if d is not None and k is not None
+        ]
+        acks_by_i: dict[int, dict] = {}
+        if valid:
+            sent = self.send_partition([r for _, r in valid])
+            for (i, _), a in zip(valid, sent):
+                acks_by_i[i] = a
+        for i, (d, k) in enumerate(entries):
+            if i not in acks_by_i:
+                acks_by_i[i] = {
+                    "partition_key": k,
+                    "data_md5": None,
+                    "status": "dead_letter",
+                    "attempts": 0,
+                    "error_code": "NullRecord",
+                    "sequence_number": None,
+                    "shard_id": None,
+                }
+        return [acks_by_i[i] for i in range(len(entries))]
+
+    def _source(
+        self, df: DataFrame, data_col: str | Column, partition_key_col: str | Column
+    ) -> tuple[DataFrame, bool]:
+        """``df`` projected to ``(_data, _key)``, and whether it is small
+        enough to collect and send in-process (see ``write_batch``)."""
+        data = F.col(data_col) if isinstance(data_col, str) else data_col
+        key = F.col(partition_key_col) if isinstance(partition_key_col, str) else partition_key_col
+        src = df.select(data.cast("binary").alias("_data"), key.cast("string").alias("_key"))
+        if df.isLocal():
+            return src, True
+        # plan statistics: these run the optimizer, not a Spark job
+        jdf = df._jdf
+        limit = jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
+        size = int(str(jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+        if 0 <= limit and size <= limit:
+            return src, True
+        return (src.repartition("_key") if self.repartition_by_key else src), False
+
     def write_batch(
         self,
         df: DataFrame,
@@ -647,61 +737,52 @@ class KinesisSink:
     ) -> DataFrame:
         """Send a (micro-)batch; returns the ack/dead-letter DataFrame.
 
-        A local input (``df.isLocal()``, e.g. a replay group built with
-        ``local_frame``) is already in driver memory: it is sent
-        in-process during this call, with no Spark job, and the acks
-        come back as a local frame. Any other frame is sent on executors
-        via mapInPandas — each partition opens its own transport and
-        streams its chunks — and its ack frame is lazy; the caller
-        (foreachBatch) decides where acks/dead letters go.
+        A small input is collected once and sent in-process during this
+        call, and its acks come back as a local frame. Small means a
+        local relation (``df.isLocal()``, e.g. a replay group built with
+        ``local_frame``: no Spark job at all), or an optimized-plan size
+        estimate (``sizeInBytes``, which runs no job) of at most the
+        session's ``spark.sql.autoBroadcastJoinThreshold``, Spark's own
+        bound for collecting a relation to the driver; ``-1`` turns that
+        bound off. Any other frame is sent on executors via mapInPandas
+        — each partition opens its own transport and streams its chunks
+        — and its ack frame is lazy; the caller decides where acks/dead
+        letters go, and each action on it sends again.
         """
-        data = F.col(data_col) if isinstance(data_col, str) else data_col
-        key = F.col(partition_key_col) if isinstance(partition_key_col, str) else partition_key_col
-        src = df.select(data.cast("binary").alias("_data"), key.cast("string").alias("_key"))
-
+        src, in_process = self._source(df, data_col, partition_key_col)
+        if in_process:
+            return local_frame(df.sparkSession, self._send_entries(src.collect()), ACK_SCHEMA)
         sink = self
-
-        def ack(entries: list[tuple]) -> list[dict]:
-            # Null data or partition key cannot be sent (and used to
-            # crash the task — under exactly_once that wedges the
-            # stream in a replay loop on the same epoch): route such
-            # records straight to dead-letter acks instead.
-            valid = [
-                (i, {"Data": bytes(d), "PartitionKey": k})
-                for i, (d, k) in enumerate(entries)
-                if d is not None and k is not None
-            ]
-            acks_by_i: dict[int, dict] = {}
-            if valid:
-                sent = sink.send_partition([r for _, r in valid])
-                for (i, _), a in zip(valid, sent):
-                    acks_by_i[i] = a
-            for i, (d, k) in enumerate(entries):
-                if i not in acks_by_i:
-                    acks_by_i[i] = {
-                        "partition_key": k,
-                        "data_md5": None,
-                        "status": "dead_letter",
-                        "attempts": 0,
-                        "error_code": "NullRecord",
-                        "sequence_number": None,
-                        "shard_id": None,
-                    }
-            return [acks_by_i[i] for i in range(len(entries))]
-
-        if df.isLocal():
-            # a projection over a local relation folds into it: no job
-            return local_frame(df.sparkSession, ack(src.collect()), ACK_SCHEMA)
-        if self.repartition_by_key:
-            src = src.repartition("_key")
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                entries = list(zip(pdf["_data"], pdf["_key"]))
-                if entries:
-                    yield pd.DataFrame(ack(entries), columns=ACK_SCHEMA.fieldNames())
+                if len(pdf):
+                    acks = sink._send_entries(list(zip(pdf["_data"], pdf["_key"])))
+                    yield pd.DataFrame(acks, columns=ACK_SCHEMA.fieldNames())
 
         return src.mapInPandas(run, ACK_SCHEMA)
+
+    def _send_epoch(
+        self, df: DataFrame, data_col: str, partition_key_col: str, ack_path: str | None, epoch_id: int
+    ) -> dict[str, int]:
+        """Send one epoch in one write attempt, write its ack files, and
+        return its ledger counters (see ``foreach_batch_writer``)."""
+        attempt_id = uuid.uuid4().hex
+        src, in_process = self._source(df, data_col, partition_key_col)
+        if in_process:
+            acks = self._send_entries(src.collect())
+            return _write_acks([acks], ack_path, epoch_id, attempt_id, 0)
+        sink = self
+
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            from pyspark import TaskContext
+
+            acks = (sink._send_entries(list(zip(p["_data"], p["_key"]))) for p in batches)
+            task = TaskContext.get().partitionId()
+            yield pd.DataFrame([_write_acks(acks, ack_path, epoch_id, attempt_id, task)])
+
+        rows = src.mapInPandas(run, LEDGER_SCHEMA).collect()
+        return {f: sum(r[f] for r in rows) for f in LEDGER_FIELDS}
 
     def foreach_batch_writer(
         self,
@@ -729,25 +810,35 @@ class KinesisSink:
         Requires ``ack_path``. Local-FS ledger here; an object-store
         deployment swaps in a conditional-put on the same layout.
 
-        ``ack_path`` must be a LOCAL path: the ack parquet write would
-        accept any Hadoop-FS URI, but the epoch-commit marker and the
-        ``_sink_metrics`` JSON ledger use local-FS primitives
-        (atomic 'x'-open / os.replace) — a remote URI would silently
-        write markers to a literal local directory named after the
-        scheme while acks went remote, splitting the ledger from the
-        data. Rejected up front instead.
+        ``ack_path`` must be a LOCAL path (on a cluster, a mount every
+        executor host shares): the ack files, the epoch-commit marker
+        and the ``_sink_metrics`` JSON ledger are written with local-FS
+        primitives (atomic 'x'-open / os.replace). A remote URI would
+        write to a literal local directory named after the scheme, so
+        it is rejected up front instead.
 
-        Ack layout: rows are written PARTITIONED BY epoch (``epoch=N/``
-        subdirs) with an ``attempt`` id column, which tells a crashed
-        attempt's leftover rows apart from the replay's. The per-epoch
-        ``_sink_metrics`` row is counted on that same write (an
-        Observation), so the sink never reads its acks back, and an
-        epoch with no rows still gets an all-zero row. A pre-round-5
-        ack_path holding flat unpartitioned parquet files can still be
-        appended to, but a plain ``spark.read.parquet(ack_path)`` over
-        such a mixed directory fails with conflicting structures; read
-        legacy dirs with ``option("basePath", ...)`` on the partition
-        subdirs, or re-write them once.
+        Ack layout: rows are PARTITIONED BY epoch (``epoch=N/`` subdirs)
+        with an ``attempt`` id column; every write attempt of an epoch
+        gets its own id. Each process that sends part of an attempt —
+        the driver for a small epoch, or each task on the executor path
+        — writes its ack rows with pyarrow to one file,
+        ``epoch=N/part-<attempt>-<task>.parquet`` (task 0 on the
+        driver), under a dot-prefixed temp name that Spark and pyarrow
+        readers skip, then ``os.replace``s it into place: readers never
+        see a partial file, a retried task replaces its own file, and a
+        process with no rows writes none. The same process counts its
+        rows into the epoch's ``_sink_metrics`` row (the executor path
+        sums one counter row per task on the driver, in the epoch's one
+        Spark job), so the sink never reads its acks back, and an epoch
+        with no rows still gets an all-zero row. Rows of an attempt that
+        failed — files of tasks that finished first, or an attempt that
+        died before its marker — stay, told apart from the replay's rows
+        by ``attempt`` (the at-least-once tail). A pre-round-5 ack_path
+        holding flat unpartitioned parquet files can still be appended
+        to, but a plain ``spark.read.parquet(ack_path)`` over such a
+        mixed directory fails with conflicting structures; read legacy
+        dirs with ``option("basePath", ...)`` on the partition subdirs,
+        or re-write them once.
 
         Failure semantics differ by mode, necessarily: the default
         mode mirrors the reference's batch-level containment
@@ -768,17 +859,15 @@ class KinesisSink:
             if m and m.group(1).lower() != "file":
                 raise ValueError(
                     f"ack_path scheme '{m.group(1)}' is not supported: the "
-                    "epoch-commit marker and _sink_metrics ledger use "
-                    "local-FS atomics; use a local path (object-store "
+                    "ack files, epoch-commit marker and _sink_metrics ledger "
+                    "use local-FS atomics; use a local path (object-store "
                     "deployments swap in a conditional-put ledger on the "
                     "same layout)"
                 )
-            if m:  # file:// → strip the scheme so os.* and Spark agree
+            if m:  # file:// → strip the scheme: every write here is os.*
                 ack_path = ack_path[len("file://") :]
 
         def write(batch_df: DataFrame, epoch_id: int) -> None:
-            import os
-
             marker = (
                 os.path.join(ack_path, "_epoch_ledger", f"epoch-{epoch_id}")
                 if ack_path
@@ -788,34 +877,14 @@ class KinesisSink:
                 print(f"kinesis sink: epoch {epoch_id} already committed, skipping replay")
                 return
             try:
-                acks = self.write_batch(batch_df, data_col, partition_key_col)
+                counters = self._send_epoch(
+                    batch_df, data_col, partition_key_col, ack_path, epoch_id
+                )
                 if ack_path:
-                    import uuid
-
-                    # every write attempt gets its own id, so the ack
-                    # log tells a crashed uncommitted attempt's leftover
-                    # rows (the documented at-least-once tail) apart
-                    # from the replay's. The ledger counters ride the
-                    # ack write as an Observation: re-aggregating the
-                    # lazy `acks` frame would re-execute the mapInPandas
-                    # stage and RE-SEND the batch.
-                    attempt_id = uuid.uuid4().hex
-                    observed, obs = observe(
-                        acks, f"kinesis_sink-epoch-{epoch_id}-{attempt_id}", *_ledger_counters()
-                    )
-                    (
-                        observed.withColumn("epoch", F.lit(epoch_id))
-                        .withColumn("attempt", F.lit(attempt_id))
-                        .write.partitionBy("epoch")
-                        .mode("append")
-                        .parquet(ack_path)
-                    )
                     # written before the exactly-once marker, so a
                     # replayed uncommitted epoch overwrites its own row
                     # with the replay's counts
-                    self._write_epoch_metrics(ack_path, epoch_id, obs.get)
-                else:
-                    acks.foreach(lambda _: None)  # force the send
+                    self._write_epoch_metrics(ack_path, epoch_id, counters)
                 if exactly_once and marker:
                     os.makedirs(os.path.dirname(marker), exist_ok=True)
                     with open(marker, "x") as fh:
@@ -837,7 +906,6 @@ class KinesisSink:
         ``<ack_path>/_sink_metrics`` — the restart-surviving ledger the
         monitor reads — replaced atomically."""
         import json
-        import os
 
         mdir = os.path.join(ack_path, "_sink_metrics")
         os.makedirs(mdir, exist_ok=True)

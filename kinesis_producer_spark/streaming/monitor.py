@@ -92,11 +92,13 @@ def sink_metrics(spark: SparkSession, ack_path: str) -> DataFrame:
     only derivable from ack rows before).
 
     The ledger is JSON-per-epoch under ``<ack_path>/_sink_metrics``,
-    written by ``KinesisSink.foreach_batch_writer`` from an Observation
-    on the epoch's ack write (the same Spark job, no re-read), before
-    the exactly-once marker: a replayed uncommitted epoch replaces its
-    row with the replay's counts, and an epoch with no rows gets an
-    all-zero row. Files, not process memory, so a restarted query
+    written by ``KinesisSink.foreach_batch_writer`` before the
+    exactly-once marker. Its counters come from the same ack rows the
+    sink writes, counted in the process that writes them (the driver,
+    or each executor task, summed on the driver): no Spark job of its
+    own and no re-read of the acks. A replayed uncommitted epoch
+    replaces its row with the replay's counts, and an epoch with no
+    rows gets an all-zero row. Files, not process memory, so a restarted query
     keeps appending to the same ledger and the counters accumulate
     across restarts."""
     import os

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 import sys
@@ -21,6 +22,30 @@ from kinesis_producer_spark.streaming.kinesis_sink import (  # noqa: E402
     _chunk,
 )
 from kinesis_producer_spark.streaming.replay import event_time_batches, replay  # noqa: E402
+
+
+@contextlib.contextmanager
+def _collect_threshold(spark, value: str | None):
+    """Set ``spark.sql.autoBroadcastJoinThreshold`` — the sink's bound on
+    sending a batch from the driver — to ``value`` (None: leave it), and
+    restore it afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+@pytest.fixture(params=["driver", "executor"])
+def sink_side(request, spark):
+    """Run a test on both sides of the sink's in-process size bound: the
+    session default (a small batch is sent from the driver), or ``-1``
+    (every non-local batch is sent from executors)."""
+    with _collect_threshold(spark, "-1" if request.param == "executor" else None):
+        yield request.param
 
 
 def _records(n: int, size: int = 10, key: str = "k") -> list[dict]:
@@ -562,18 +587,23 @@ def test_exactly_once_epoch_ledger_skips_replay(spark, tmp_path):
         sink.foreach_batch_writer(exactly_once=True)
 
 
-def test_exactly_once_crash_replay_end_to_end(spark, tmp_path):
-    """The exactly-once north star, end to end: a transport crash
-    MID-PARTITION (after a chunk already reached the mock AWS) kills
-    the streaming query without committing the epoch; a restart from
-    the checkpoint replays the SAME epoch_id; the ledger + ack parquet
-    end up with exactly one ack per record, and once the epoch is
-    committed further replays add ZERO transport traffic."""
+def test_exactly_once_crash_replay_end_to_end(spark, tmp_path, sink_side):
+    """The exactly-once north star, end to end, with the epoch sent from
+    the driver and from an executor: a transport crash MID-PARTITION
+    (after a chunk already reached the mock AWS) kills the streaming
+    query without committing the epoch; a restart from the checkpoint
+    replays the SAME epoch_id; the ledger + ack parquet end up with
+    exactly one ack per record, readers skip a writer's temp file, and
+    once the epoch is committed further replays add ZERO transport
+    traffic."""
     import hashlib
     import os
 
+    import pyarrow.dataset as ds
+
     src_dir = tmp_path / "eo_src"
     log_path = str(tmp_path / "transport.log")
+    pid_log = str(tmp_path / "transport_pids.log")
     crash_flag = str(tmp_path / "crash_once")
     ack_path = str(tmp_path / "acks")
     ckpt = str(tmp_path / "ckpt")
@@ -596,6 +626,8 @@ def test_exactly_once_crash_replay_end_to_end(spark, tmp_path):
             with open(log_path, "a") as fh:
                 for r in records:
                     fh.write(hashlib.md5(r["Data"]).hexdigest() + "\n")
+            with open(pid_log, "a") as fh:
+                fh.write(f"{os.getpid()}\n")
             try:
                 os.rename(crash_flag, crash_flag + ".used")  # atomic consume
                 raise RuntimeError("injected mid-partition transport crash")
@@ -632,8 +664,8 @@ def test_exactly_once_crash_replay_end_to_end(spark, tmp_path):
         failed = True
     assert failed, "crashed epoch must fail the query, not commit"
     assert os.path.exists(crash_flag + ".used")  # some records DID reach AWS
-    assert not os.path.exists(ack_path) or not [
-        f for f in os.listdir(ack_path) if f.endswith(".parquet")
+    assert not [
+        f for _, _, files in os.walk(ack_path) for f in files if ".parquet" in f
     ], "no acks may commit for a crashed epoch"
 
     # run 2: restart from the checkpoint → SAME epoch replays, succeeds
@@ -651,6 +683,16 @@ def test_exactly_once_crash_replay_end_to_end(spark, tmp_path):
     assert len(epochs) == 1  # one committed epoch id
     marker = tmp_path / "acks" / "_epoch_ledger" / f"epoch-{epochs[0]}"
     assert marker.exists()
+    # a writer killed mid-file leaves only its dot-prefixed temp file,
+    # which neither Spark nor pyarrow reads
+    edir = tmp_path / "acks" / f"epoch={epochs[0]}"
+    (edir / ".part-killed-00000.parquet.0123abcd").write_bytes(b"not parquet")
+    acks = spark.read.parquet(ack_path)
+    assert acks.count() == n_records
+    assert not [f for f in acks.inputFiles() if os.path.basename(f).startswith(".")]
+    arrow = ds.dataset(ack_path, format="parquet", partitioning="hive")
+    assert not [f for f in arrow.files if os.path.basename(f).startswith(".")]
+    assert arrow.count_rows() == n_records
 
     # transport-level accounting: every record delivered; only the
     # chunk in flight at the crash was re-sent (bounded duplication,
@@ -662,6 +704,9 @@ def test_exactly_once_crash_replay_end_to_end(spark, tmp_path):
     }
     assert set(sent) == expected
     assert len(sent) <= n_records + MAX_RECORDS_PER_CALL
+    with open(pid_log) as fh:
+        from_driver = {int(line) for line in fh} == {os.getpid()}
+    assert from_driver == (sink_side == "driver")
 
     # run 3: replay of the COMMITTED epoch adds zero transport traffic
     n_sent_before = len(sent)
@@ -1072,6 +1117,50 @@ def test_write_batch_local_frame_launches_no_job(spark, count_jobs):
     assert len(acks) == 50 and all(a.status == "ok" for a in acks)
     # sent during the call, in this process
     assert sum(len(c) for t in transports for c in t.calls) == 50
+
+
+@pytest.mark.parametrize("threshold", [None, "1"])
+def test_small_file_scan_is_sent_in_process(spark, tmp_path, count_jobs, threshold):
+    """A non-local frame whose plan size estimate is within
+    spark.sql.autoBroadcastJoinThreshold (a parquet file read back) is
+    collected once and sent from the driver, and its epoch writes one
+    ack file; above the bound (1 byte) each executor task sends its own
+    partitions and writes its own file. One Spark job either way."""
+    import pyarrow.parquet as pq
+
+    transports: list[RecordingTransport] = []
+
+    def factory():
+        transports.append(RecordingTransport(fail_first_attempt_prefix="zz"))
+        return transports[-1]
+
+    src = str(tmp_path / "small_src")
+    spark.createDataFrame(
+        [(f"p{i}", f"k{i % 3}") for i in range(40)], "data string, partition_key string"
+    ).repartition(2).write.parquet(src)
+    batch = spark.read.parquet(src)
+    assert not batch.isLocal()
+    sink = KinesisSink("s", factory, backoff_s=0.0)
+    ack_dir = tmp_path / "small_acks"
+    with _collect_threshold(spark, threshold):
+        acks, jobs = count_jobs(lambda: sink.write_batch(batch).collect())
+        assert jobs == 1 and len(acks) == 40
+        _, jobs = count_jobs(lambda: sink.foreach_batch_writer(ack_path=str(ack_dir))(batch, 3))
+        assert jobs == 1
+    files = sorted(p.name for p in (ack_dir / "epoch=3").iterdir())
+    driver_calls = sum(len(c) for t in transports for c in t.calls)
+    if threshold is None:
+        assert driver_calls == 80  # both sends ran in this process
+        assert len(files) == 1 and files[0].endswith("-00000.parquet")
+    else:
+        assert driver_calls == 0
+        assert len(files) == 2
+    (attempt,) = {f.split("-")[1] for f in files}
+    table = pq.read_table(ack_dir / "epoch=3" / files[0])
+    assert table.column_names[-1] == "attempt"
+    assert set(table.column("attempt").to_pylist()) == {attempt}
+    acks = spark.read.parquet(str(ack_dir))
+    assert acks.where("status = 'ok' AND epoch = 3").count() == 40
 
 
 def test_streaming_lsh_epoch_aging_bounds_state(spark, tmp_path):
@@ -1954,11 +2043,14 @@ def test_retry_policy_throttle_backs_off_and_mixed_classes_split():
     assert n_validate_sends == 1
 
 
-def test_sink_metrics_ledger_splits_dead_letters_by_class(spark, tmp_path, count_jobs):
+def test_sink_metrics_ledger_splits_dead_letters_by_class(
+    spark, tmp_path, count_jobs, sink_side
+):
     """The per-epoch ledger splits dead letters into throttle /
     internal / terminal classes (plus the existing NullRecord count),
-    and is counted on the ack write itself: the epoch is one Spark job,
-    with no re-read of the acks it just wrote."""
+    and is counted where the acks are written, from the driver or on
+    executors: the epoch is one Spark job, with no re-read of the acks
+    it just wrote, and the ledger row is the same bytes either way."""
     from kinesis_producer_spark.streaming import monitor
     from kinesis_producer_spark.streaming.kinesis_sink import (
         KinesisSink,
@@ -1982,13 +2074,21 @@ def test_sink_metrics_ledger_splits_dead_letters_by_class(spark, tmp_path, count
         "s", lambda: RecordingTransport(error_schedule=schedule), max_retries=1, backoff_s=0.0
     )
     write = sink.foreach_batch_writer(ack_path=ack_path)
-    batch = spark.createDataFrame(
+    spark.createDataFrame(
         [(bytearray(b"evt-%d" % i), f"k{i}") for i in range(64)]
         + [(None, "nullkey")],
         "data binary, partition_key string",
-    )
+    ).write.parquet(str(tmp_path / "class_src"))
+    # a file scan carries a size estimate, so it takes either side
+    batch = spark.read.parquet(str(tmp_path / "class_src"))
     _, jobs = count_jobs(lambda: write(batch, 0))
     assert jobs == 1
+    # the exact ledger row for this input: monitor readers parse these bytes
+    assert (tmp_path / "class_acks" / "_sink_metrics" / "epoch-0.json").read_text() == (
+        '{"epoch": 0, "sent": 24, "retried": 0, "dead_lettered": 41, '
+        '"null_records": 1, "attempts_total": 96, "dead_throttle": 10, '
+        '"dead_internal": 22, "dead_terminal": 8}'
+    )
     (m,) = monitor.sink_metrics(spark, ack_path).collect()
     acks = spark.read.option("basePath", ack_path).parquet(f"{ack_path}/epoch=0")
     by_code = {

@@ -105,3 +105,48 @@ def test_session_built_outside_the_repo_uses_the_daemon(tmp_path):
         timeout=300,
     )
     assert out.split("names", 1)[1].split() == ["invalidate_caches_if_changed"]
+
+
+def test_package_zip_ships_only_without_the_root_and_goes_with_the_context(tmp_path):
+    """``_ship_package`` zips the package only for a session whose
+    executors lack the package root (one built elsewhere), and the zip
+    goes when that context stops; a ``get_spark`` session's workers
+    import the package from the root and no zip is written."""
+    out = _run(
+        f"""
+        import glob, os, sys
+        sys.path.insert(0, {REPO!r})
+        import pandas as pd
+        from pyspark import SparkFiles
+        from pyspark.sql import SparkSession, functions as F
+        from pyspark.sql.types import StringType
+        from kinesis_producer_spark.session import _ship_package, get_spark
+
+        def run(spark):
+            # a UDF keeps the environment of the context it first ran in
+            @F.pandas_udf(StringType())
+            def origin(ids: pd.Series) -> pd.Series:
+                import kinesis_producer_spark
+
+                return ids.map(lambda _: "zip" if ".zip" in kinesis_producer_spark.__file__ else "root")
+
+            root = SparkFiles.getRootDirectory()
+            zips = glob.glob(os.path.join(root, "**", "*.zip"), recursive=True)
+            got = {{r[0] for r in spark.range(4, numPartitions=2).select(origin("id")).collect()}}
+            spark.stop()
+            return len(zips), sorted(got), os.path.exists(root)
+
+        # a session built elsewhere: no package root on the executors' path
+        plain = (SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false")
+                 .config("spark.driver.memory", "512m").getOrCreate())
+        _ship_package(plain)
+        print("plain", *run(plain))
+        print("get_spark", *run(get_spark("ship-test", cpus=1, extra_conf={{"spark.driver.memory": "512m"}})))
+        """,
+        cwd=str(tmp_path),
+        timeout=300,
+    )
+    lines = dict(line.split(" ", 1) for line in out.splitlines() if " " in line)
+    # shipped: the zip and Spark's copy of it, both removed with the context
+    assert lines["plain"] == "2 ['zip'] False"
+    assert lines["get_spark"] == "0 ['root'] False"
