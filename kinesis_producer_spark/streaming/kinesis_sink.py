@@ -7,11 +7,10 @@ and drops the batch on error. This sink is the Spark-first rebuild:
 - runs inside ``writeStream.foreachBatch`` (or on any batch DataFrame).
   A small frame is collected once and sent from the driver, in-process:
   a local relation (e.g. one replay group, with no Spark job), or any
-  frame whose optimized-plan size estimate is within the session's
-  ``spark.sql.autoBroadcastJoinThreshold`` (Spark's own bound for
-  collecting a relation to the driver). A larger frame is sent **from
-  executors in parallel** — each partition chunks its records and calls
-  the transport — so a large batch never funnels through the driver;
+  frame whose optimized-plan size estimate is within
+  ``IN_PROCESS_MAX_BYTES``. A larger frame is sent **from executors in
+  parallel** — each partition chunks its records and calls the
+  transport — so a large batch never funnels through the driver;
 - respects the public AWS API limits by construction: ≤500 records and
   ≤5 MB per call, ≤1 MB per record (AWS service quotas — these bound
   the reference's ``put_records`` at main.py:20);
@@ -34,6 +33,7 @@ partition key to keep per-shard ordering while spreading load.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import time
@@ -52,6 +52,14 @@ from pyspark.sql.pandas.types import to_arrow_schema
 MAX_RECORDS_PER_CALL = 500
 MAX_BYTES_PER_CALL = 5 * 1024 * 1024
 MAX_BYTES_PER_RECORD = 1024 * 1024
+
+# The largest batch, by its optimized plan's size estimate, that the
+# sink collects and sends from the driver; a larger one is sent from
+# executors in parallel. Measured crossover of one foreach_batch_writer
+# epoch (JSON-lines files of 1.5 KB records, 4 files, local[4]): the
+# driver path wins at 2 MB (284 vs 308 ms p50) and loses at 4 MB
+# (426 vs 358 ms); with more executor cores the crossover only falls.
+IN_PROCESS_MAX_BYTES = 2 * 1024 * 1024
 
 ACK_SCHEMA = T.StructType(
     [
@@ -544,7 +552,12 @@ LEDGER_FIELDS = (
     "sent", "retried", "dead_lettered", "null_records",
     "attempts_total", "dead_throttle", "dead_internal", "dead_terminal",
 )
-LEDGER_SCHEMA = T.StructType([T.StructField(f, T.LongType()) for f in LEDGER_FIELDS])
+# one executor task's result row on the epoch path: its counters and
+# the temp ack file it wrote (null: no rows, or no ack_path)
+EPOCH_TASK_SCHEMA = T.StructType(
+    [T.StructField(f, T.LongType()) for f in LEDGER_FIELDS]
+    + [T.StructField("ack_tmp", T.StringType())]
+)
 
 # an ack file's columns: the ack row plus the id of the write attempt
 ACK_FILE_SCHEMA = to_arrow_schema(ACK_SCHEMA).append(pa.field("attempt", pa.string()))
@@ -568,40 +581,50 @@ def _ledger(acks: list[dict]) -> dict[str, int]:
     return c
 
 
-def _write_acks(
-    batches: Iterable[list[dict]], ack_path: str | None, epoch_id: int, attempt_id: str, task: int
-) -> dict[str, int]:
-    """Count the ledger over one process's ack rows and, given an
-    ``ack_path``, write them to ``epoch=<epoch_id>/part-<attempt_id>-<task>.parquet``.
+def _ledger_sum(parts: Iterable[dict]) -> dict[str, int]:
+    """Field-wise sum of ledger counters."""
+    total = dict.fromkeys(LEDGER_FIELDS, 0)
+    for part in parts:
+        for f in LEDGER_FIELDS:
+            total[f] += part[f]
+    return total
 
-    The file is written under a dot-prefixed temp name, which Spark and
-    pyarrow readers skip, and then ``os.replace``d into place: a reader
-    never sees a partial file, and a retried task replaces its own
-    file. No rows, no file."""
-    counters = dict.fromkeys(LEDGER_FIELDS, 0)
-    edir = os.path.join(ack_path or "", f"epoch={epoch_id}")
-    name = f"part-{attempt_id}-{task:05d}.parquet"
-    tmp = os.path.join(edir, f".{name}.{uuid.uuid4().hex}")
+
+def _write_acks(
+    batches: Iterable[list[dict]], tmp: str, attempt_id: str
+) -> tuple[dict[str, int], bool]:
+    """Write one process's ack rows to the temp file ``tmp``; return
+    their ledger counters and whether a file was written (no rows, no
+    file). The caller renames the file into place (``_commit_acks``)."""
+    parts = []
     writer = None
     try:
         for acks in batches:
-            for k, v in _ledger(acks).items():
-                counters[k] += v
-            if not (ack_path and acks):
+            parts.append(_ledger(acks))
+            if not acks:
                 continue
             if writer is None:
-                os.makedirs(edir, exist_ok=True)
+                os.makedirs(os.path.dirname(tmp), exist_ok=True)
                 writer = pq.ParquetWriter(tmp, ACK_FILE_SCHEMA)
             rows = [dict(a, attempt=attempt_id) for a in acks]
             writer.write_table(pa.Table.from_pylist(rows, schema=ACK_FILE_SCHEMA))
+    finally:
         if writer is not None:
             writer.close()
-            os.replace(tmp, os.path.join(edir, name))
-    finally:
-        if writer is not None and os.path.exists(tmp):  # failed before the replace
-            os.remove(tmp)
-            writer.close()
-    return counters
+    return _ledger_sum(parts), writer is not None
+
+
+def _commit_acks(edir: str, attempt_id: str, tmps: list[str]) -> None:
+    """Rename an attempt's written temp ack files into place, then
+    remove any other temp file of the attempt (a failed or superseded
+    task's, or all of them when the attempt failed: ``tmps`` empty).
+
+    A temp file ``.<name>.<uuid>`` becomes ``<name>``; the leading dot
+    keeps Spark and pyarrow readers off it until then."""
+    for tmp in tmps:
+        os.replace(tmp, os.path.join(edir, os.path.basename(tmp)[1:].rsplit(".", 1)[0]))
+    for left in glob.glob(os.path.join(glob.escape(edir), f".part-{attempt_id}-*")):
+        os.remove(left)
 
 
 @dataclass
@@ -722,10 +745,8 @@ class KinesisSink:
         if df.isLocal():
             return src, True
         # plan statistics: these run the optimizer, not a Spark job
-        jdf = df._jdf
-        limit = jdf.sparkSession().sessionState().conf().autoBroadcastJoinThreshold()
-        size = int(str(jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-        if 0 <= limit and size <= limit:
+        size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+        if size <= IN_PROCESS_MAX_BYTES:
             return src, True
         return (src.repartition("_key") if self.repartition_by_key else src), False
 
@@ -741,10 +762,11 @@ class KinesisSink:
         call, and its acks come back as a local frame. Small means a
         local relation (``df.isLocal()``, e.g. a replay group built with
         ``local_frame``: no Spark job at all), or an optimized-plan size
-        estimate (``sizeInBytes``, which runs no job) of at most the
-        session's ``spark.sql.autoBroadcastJoinThreshold``, Spark's own
-        bound for collecting a relation to the driver; ``-1`` turns that
-        bound off. Any other frame is sent on executors via mapInPandas
+        estimate (``sizeInBytes``, which runs no job) of at most
+        ``IN_PROCESS_MAX_BYTES``, below which one driver thread was
+        measured to beat parallel executor tasks. A frame with no
+        estimate (e.g. one built from an RDD) counts as large. Any other
+        frame is sent on executors via mapInPandas
         — each partition opens its own transport and streams its chunks
         — and its ack frame is lazy; the caller decides where acks/dead
         letters go, and each action on it sends again.
@@ -763,26 +785,54 @@ class KinesisSink:
         return src.mapInPandas(run, ACK_SCHEMA)
 
     def _send_epoch(
-        self, df: DataFrame, data_col: str, partition_key_col: str, ack_path: str | None, epoch_id: int
+        self,
+        df: DataFrame,
+        data_col: str,
+        partition_key_col: str,
+        ack_path: str | None,
+        epoch_id: int,
     ) -> dict[str, int]:
-        """Send one epoch in one write attempt, write its ack files, and
-        return its ledger counters (see ``foreach_batch_writer``)."""
+        """Send one epoch in one write attempt, write and commit its ack
+        files, and return its ledger counters (see ``foreach_batch_writer``)."""
         attempt_id = uuid.uuid4().hex
+        edir = os.path.join(ack_path, f"epoch={epoch_id}") if ack_path else None
+
+        def tmp_for(task: int) -> str:
+            return os.path.join(edir, f".part-{attempt_id}-{task:05d}.parquet.{uuid.uuid4().hex}")
+
         src, in_process = self._source(df, data_col, partition_key_col)
-        if in_process:
-            acks = self._send_entries(src.collect())
-            return _write_acks([acks], ack_path, epoch_id, attempt_id, 0)
-        sink = self
+        tmps: list[str] = []
+        try:
+            if in_process:
+                acks = self._send_entries(src.collect())
+                if edir is None:
+                    return _ledger(acks)
+                tmp = tmp_for(0)
+                counters, wrote = _write_acks([acks], tmp, attempt_id)
+                tmps = [tmp] if wrote else []
+            else:
+                sink = self
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from pyspark import TaskContext
+                def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+                    from pyspark import TaskContext
 
-            acks = (sink._send_entries(list(zip(p["_data"], p["_key"]))) for p in batches)
-            task = TaskContext.get().partitionId()
-            yield pd.DataFrame([_write_acks(acks, ack_path, epoch_id, attempt_id, task)])
+                    acks = (sink._send_entries(list(zip(p["_data"], p["_key"]))) for p in batches)
+                    tmp = None
+                    if edir is None:
+                        counters = _ledger_sum(map(_ledger, acks))
+                    else:
+                        tmp = tmp_for(TaskContext.get().partitionId())
+                        counters, wrote = _write_acks(acks, tmp, attempt_id)
+                        tmp = tmp if wrote else None
+                    yield pd.DataFrame([{**counters, "ack_tmp": tmp}])
 
-        rows = src.mapInPandas(run, LEDGER_SCHEMA).collect()
-        return {f: sum(r[f] for r in rows) for f in LEDGER_FIELDS}
+                rows = src.mapInPandas(run, EPOCH_TASK_SCHEMA).collect()
+                counters = _ledger_sum(rows)
+                tmps = [r.ack_tmp for r in rows if r.ack_tmp]
+        finally:
+            if edir is not None:
+                _commit_acks(edir, attempt_id, tmps)
+        return counters
 
     def foreach_batch_writer(
         self,
@@ -821,19 +871,22 @@ class KinesisSink:
         with an ``attempt`` id column; every write attempt of an epoch
         gets its own id. Each process that sends part of an attempt —
         the driver for a small epoch, or each task on the executor path
-        — writes its ack rows with pyarrow to one file,
-        ``epoch=N/part-<attempt>-<task>.parquet`` (task 0 on the
-        driver), under a dot-prefixed temp name that Spark and pyarrow
-        readers skip, then ``os.replace``s it into place: readers never
-        see a partial file, a retried task replaces its own file, and a
-        process with no rows writes none. The same process counts its
-        rows into the epoch's ``_sink_metrics`` row (the executor path
-        sums one counter row per task on the driver, in the epoch's one
-        Spark job), so the sink never reads its acks back, and an epoch
-        with no rows still gets an all-zero row. Rows of an attempt that
-        failed — files of tasks that finished first, or an attempt that
-        died before its marker — stay, told apart from the replay's rows
-        by ``attempt`` (the at-least-once tail). A pre-round-5 ack_path
+        — writes its ack rows with pyarrow to one temp file,
+        ``epoch=N/.part-<attempt>-<task>.parquet.<uuid>``, whose leading
+        dot keeps Spark and pyarrow readers off it; a process with no
+        rows writes none. The same process counts its rows into the
+        epoch's ``_sink_metrics`` row (the executor path returns one
+        counter row per task, with its temp file's path, to the driver
+        in the epoch's one Spark job), so the sink never reads its acks
+        back, and an epoch with no rows still gets an all-zero row. The
+        driver commits: once every task has succeeded it ``os.replace``s
+        each returned temp file to ``epoch=N/part-<attempt>-<task>.parquet``
+        (task 0 on the driver), and then, or when the attempt fails,
+        removes every other temp file of the attempt (a failed task's,
+        or all of them). So a failed attempt leaves no ack rows; rows of
+        an attempt that died after its files were committed but before
+        its marker stay, told apart from the replay's rows by
+        ``attempt`` (the at-least-once tail). A pre-round-5 ack_path
         holding flat unpartitioned parquet files can still be appended
         to, but a plain ``spark.read.parquet(ack_path)`` over such a
         mixed directory fails with conflicting structures; read legacy

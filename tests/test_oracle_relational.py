@@ -36,6 +36,20 @@ def test_oracle_match(name, spark, duck):
         pytest.fail(f"{name}: {msg}")
 
 
+def test_q40_oracle_match_on_executor_path(spark, duck, monkeypatch):
+    """q40's events fit the sink's in-process bound, so the sweep above
+    checks the driver send; at a -1 bound the same acks are sent from
+    executors and must match the same oracle."""
+    from kinesis_producer_spark.streaming import kinesis_sink
+
+    monkeypatch.setattr(kinesis_sink, "IN_PROCESS_MAX_BYTES", -1)
+    name = "q40_kinesis_sink_acks"
+    sdf = QUERIES[name](spark, SF)
+    srows = [tuple(r) for r in sdf.collect()]
+    msg = compare(sdf.columns, srows, *duckdb_result(duck, ORACLE[name]))
+    assert msg is None, msg
+
+
 def test_meta_uncast_sum_is_caught(spark, duck):
     """Meta-test for the gate itself: a bare integer SUM() in oracle SQL
     comes back HUGEINT → pandas float64 → renders '4950.0' while the

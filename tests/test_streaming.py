@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import contextlib
 import math
 import os
 import sys
@@ -14,6 +13,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from kinesis_producer_spark.streaming import kinesis_sink  # noqa: E402
 from kinesis_producer_spark.streaming.kinesis_sink import (  # noqa: E402
     MAX_BYTES_PER_CALL,
     MAX_RECORDS_PER_CALL,
@@ -24,28 +24,14 @@ from kinesis_producer_spark.streaming.kinesis_sink import (  # noqa: E402
 from kinesis_producer_spark.streaming.replay import event_time_batches, replay  # noqa: E402
 
 
-@contextlib.contextmanager
-def _collect_threshold(spark, value: str | None):
-    """Set ``spark.sql.autoBroadcastJoinThreshold`` — the sink's bound on
-    sending a batch from the driver — to ``value`` (None: leave it), and
-    restore it afterwards."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    before = spark.conf.get(key)
-    if value is not None:
-        spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, before)
-
-
 @pytest.fixture(params=["driver", "executor"])
-def sink_side(request, spark):
+def sink_side(request, monkeypatch):
     """Run a test on both sides of the sink's in-process size bound: the
-    session default (a small batch is sent from the driver), or ``-1``
-    (every non-local batch is sent from executors)."""
-    with _collect_threshold(spark, "-1" if request.param == "executor" else None):
-        yield request.param
+    default (a small batch is sent from the driver), or ``-1`` (every
+    non-local batch is sent from executors)."""
+    if request.param == "executor":
+        monkeypatch.setattr(kinesis_sink, "IN_PROCESS_MAX_BYTES", -1)
+    return request.param
 
 
 def _records(n: int, size: int = 10, key: str = "k") -> list[dict]:
@@ -717,6 +703,76 @@ def test_exactly_once_crash_replay_end_to_end(spark, tmp_path, sink_side):
     assert spark.read.parquet(ack_path).count() == n_records
 
 
+def test_exactly_once_task_crash_leaves_no_acks_of_finished_tasks(
+    spark, tmp_path, monkeypatch
+):
+    """Executor path, three tasks: one task's transport crashes only
+    after the other two tasks have written their ack files. The failed
+    attempt must leave no ack file (final or temp) behind, so the replay
+    of the epoch ends with exactly one ack row per record."""
+    import glob
+    import hashlib
+
+    monkeypatch.setattr(kinesis_sink, "IN_PROCESS_MAX_BYTES", -1)
+    ack_path = str(tmp_path / "acks")
+    crash_flag = str(tmp_path / "crash_once")
+    with open(crash_flag, "w") as fh:
+        fh.write("armed")
+
+    class CrashAfterOthersTransport(RecordingTransport):
+        """Crashes once, in the task sending key ``crash``, after the two
+        other tasks' ack files (temp or final) are complete (parquet
+        footer written); the used flag records how many it saw."""
+
+        def __init__(self):
+            super().__init__(fail_first_attempt_prefix="zz")
+
+        def put_records(self, stream_name, records):
+            if records[0]["PartitionKey"] == "crash" and os.path.exists(crash_flag):
+                done: list[str] = []
+                deadline = time.time() + 60
+                while len(done) < 2 and time.time() < deadline:
+                    time.sleep(0.05)
+                    done = []
+                    for edir in glob.glob(os.path.join(ack_path, "epoch=*")):
+                        for name in os.listdir(edir):  # glob skips dot-files
+                            with open(os.path.join(edir, name), "rb") as fh:
+                                if "part-" in name and fh.read()[-4:] == b"PAR1":
+                                    done.append(name)
+                os.rename(crash_flag, crash_flag + ".used")
+                with open(crash_flag + ".used", "w") as fh:
+                    fh.write(str(len(done)))
+                raise RuntimeError("injected transport crash after the other tasks")
+            return super().put_records(stream_name, records)
+
+    src_dir = str(tmp_path / "src")
+    for key in ("a", "b", "crash"):  # one file per key: three partitions
+        spark.createDataFrame(
+            [(f"{key}-{i}", key) for i in range(30)], "data string, partition_key string"
+        ).coalesce(1).write.mode("append").parquet(src_dir)
+    batch = spark.read.parquet(src_dir)
+    assert batch.rdd.getNumPartitions() == 3
+
+    writer = KinesisSink("s", CrashAfterOthersTransport, backoff_s=0.0).foreach_batch_writer(
+        ack_path=ack_path, exactly_once=True
+    )
+    with pytest.raises(Exception):
+        writer(batch, 0)
+    with open(crash_flag + ".used") as fh:
+        assert fh.read() == "2"  # both other tasks had finished their files
+    assert not [f for _, _, files in os.walk(ack_path) for f in files]
+
+    writer(batch, 0)  # the replay of the same epoch
+    acks = spark.read.parquet(ack_path)
+    assert acks.count() == 90 and acks.select("attempt").distinct().count() == 1
+    assert acks.select("data_md5").distinct().count() == 90
+    assert sorted(r.data_md5 for r in acks.collect()) == sorted(
+        hashlib.md5(f"{k}-{i}".encode()).hexdigest() for k in ("a", "b", "crash") for i in range(30)
+    )
+    assert len(os.listdir(os.path.join(ack_path, "epoch=0"))) == 3
+    assert os.path.exists(os.path.join(ack_path, "_epoch_ledger", "epoch-0"))
+
+
 def test_progress_recorder_ledger(spark, tmp_path):
     """The listener ledger accounts for every input row across
     micro-batches and is queryable as a DataFrame."""
@@ -1119,13 +1175,13 @@ def test_write_batch_local_frame_launches_no_job(spark, count_jobs):
     assert sum(len(c) for t in transports for c in t.calls) == 50
 
 
-@pytest.mark.parametrize("threshold", [None, "1"])
-def test_small_file_scan_is_sent_in_process(spark, tmp_path, count_jobs, threshold):
-    """A non-local frame whose plan size estimate is within
-    spark.sql.autoBroadcastJoinThreshold (a parquet file read back) is
-    collected once and sent from the driver, and its epoch writes one
-    ack file; above the bound (1 byte) each executor task sends its own
-    partitions and writes its own file. One Spark job either way."""
+@pytest.mark.parametrize("bound", [None, 1])
+def test_small_file_scan_is_sent_in_process(spark, tmp_path, count_jobs, monkeypatch, bound):
+    """A non-local frame whose plan size estimate is within the sink's
+    IN_PROCESS_MAX_BYTES (a parquet file read back) is collected once
+    and sent from the driver, and its epoch writes one ack file; above
+    the bound (1 byte) each executor task sends its own partitions and
+    writes its own file. One Spark job either way."""
     import pyarrow.parquet as pq
 
     transports: list[RecordingTransport] = []
@@ -1142,14 +1198,15 @@ def test_small_file_scan_is_sent_in_process(spark, tmp_path, count_jobs, thresho
     assert not batch.isLocal()
     sink = KinesisSink("s", factory, backoff_s=0.0)
     ack_dir = tmp_path / "small_acks"
-    with _collect_threshold(spark, threshold):
-        acks, jobs = count_jobs(lambda: sink.write_batch(batch).collect())
-        assert jobs == 1 and len(acks) == 40
-        _, jobs = count_jobs(lambda: sink.foreach_batch_writer(ack_path=str(ack_dir))(batch, 3))
-        assert jobs == 1
+    if bound is not None:
+        monkeypatch.setattr(kinesis_sink, "IN_PROCESS_MAX_BYTES", bound)
+    acks, jobs = count_jobs(lambda: sink.write_batch(batch).collect())
+    assert jobs == 1 and len(acks) == 40
+    _, jobs = count_jobs(lambda: sink.foreach_batch_writer(ack_path=str(ack_dir))(batch, 3))
+    assert jobs == 1
     files = sorted(p.name for p in (ack_dir / "epoch=3").iterdir())
     driver_calls = sum(len(c) for t in transports for c in t.calls)
-    if threshold is None:
+    if bound is None:
         assert driver_calls == 80  # both sends ran in this process
         assert len(files) == 1 and files[0].endswith("-00000.parquet")
     else:
