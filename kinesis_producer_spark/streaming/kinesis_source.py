@@ -22,10 +22,12 @@ public Kinesis consumer semantics:
   positions, records returned in sequence order, a `next` iterator to
   resume from. Driver-side control flow only; the data path is the
   distributed read below.
-- **distributed read**: ``read_stream_records`` scans every shard's
-  block files as ONE Spark job — shard id, block and offset parse out
-  of the file path/line position, so the scan stays an ordinary
-  columnar read with no per-record driver work.
+- **distributed read**: ``read_stream_records`` is one lazy Spark
+  scan of every shard's block files, and ``consume_new_records`` one
+  lazy scan of only the blocks after the committed positions. Both
+  share one projection: shard id, block and offset parse out of the
+  file path/line position, so the scan stays an ordinary columnar
+  read with no per-record driver work.
 - **resharding-aware ordering**: ``SplitShard``/``MergeShards`` close
   parents before children receive records, and Kinesis consumers must
   DRAIN a parent before starting its children or per-key order breaks
@@ -36,10 +38,13 @@ public Kinesis consumer semantics:
   exhausted.
 - **at-least-once + dedup on SequenceNumber**: ``ShardCheckpoint``
   stores per-shard positions (atomic replace). ``consume_new_records``
-  returns records strictly AFTER the stored positions; a crash between
-  read and commit re-reads the same records (at-least-once), and the
-  position filter is the dedup — a committed sequence number is never
-  served again.
+  picks, on the driver, the blocks holding records strictly AFTER the
+  stored positions (GetRecords after a sequence number) and returns a
+  scan of them bounded by the positions they end at. Blocks are
+  published whole and never change, so that range is the round's
+  snapshot. A crash between read and commit re-reads
+  the same records (at-least-once), and the positions are the dedup —
+  a committed sequence number is never served again.
 
 At 100 TB the shard logs are object-store prefixes and the block scan
 is the same partitioned read; the iterator/position layer is bounded
@@ -71,6 +76,29 @@ RECORD_SCHEMA = (
 
 def _seq(block: int, i: int) -> str:
     return f"{block:0{_BLOCK_W}d}.{i:0{_IDX_W}d}"
+
+
+def _block_path(sdir: str, block: int) -> str:
+    return os.path.join(sdir, f"block-{block:0{_BLOCK_W}d}.jsonl")
+
+
+def _first_free_block(sdir: str) -> int:
+    """The first unclaimed block index of a shard directory. Indices
+    are claimed contiguously from 0 and blocks are never removed, so
+    the claimed ones form a prefix: gallop to a missing index, then
+    bisect — O(log blocks) existence checks instead of a listing. A
+    block claimed meanwhile only moves the answer up, and the publish
+    loop steps past it."""
+    lo, hi = 0, 1
+    while os.path.exists(_block_path(sdir, hi - 1)):
+        lo, hi = hi, 2 * hi
+    while lo < hi - 1:  # blocks below lo exist, block hi - 1 does not
+        mid = (lo + hi - 1) // 2
+        if os.path.exists(_block_path(sdir, mid)):
+            lo = mid + 1
+        else:
+            hi = mid + 1
+    return lo
 
 
 class FileStreamTransport(MockKinesisService):
@@ -127,13 +155,10 @@ class FileStreamTransport(MockKinesisService):
         with open(tmp, "w") as fh:
             for r in rows:
                 fh.write(json.dumps(r, sort_keys=True) + "\n")
-        k = sum(
-            1 for name in os.listdir(sdir) if name.startswith("block-")
-        )
+        k = _first_free_block(sdir)
         while True:
-            target = os.path.join(sdir, f"block-{k:0{_BLOCK_W}d}.jsonl")
             try:
-                os.link(tmp, target)  # atomic claim + complete content
+                os.link(tmp, _block_path(sdir, k))  # atomic claim + complete content
                 break
             except FileExistsError:
                 k += 1
@@ -235,6 +260,38 @@ def get_shard_iterator(
     raise ValueError(f"unknown iterator_type {iterator_type!r}")
 
 
+def _last_seq(block: int, path: str) -> str:
+    """Sequence number of a block file's last record (one line per
+    record; a published block is never empty)."""
+    with open(path, "rb") as fh:
+        return _seq(block, fh.read().count(b"\n") - 1)
+
+
+def _blocks_after(sdir: str, after: str | None) -> list[tuple[int, str]]:
+    """The (block index, path) of every block in shard directory
+    ``sdir`` that holds a record strictly after position ``after``
+    (None = TRIM_HORIZON), in sequence order. The index is the
+    position's ``_seq`` prefix. The committed block itself is included
+    only when ``after`` is not its last record — a ``get_records`` page
+    or a hand-set position — and callers drop its consumed rows by
+    sequence number. Then come the blocks after it up to the first
+    missing index: the producer claims indices contiguously and
+    publishes each block whole, so the run is complete and its files
+    never change."""
+    k = 0
+    out = []
+    if after is not None:
+        k = int(after.split(".")[0])
+        path = _block_path(sdir, k)
+        if os.path.exists(path) and _last_seq(k, path) > after:
+            out.append((k, path))
+        k += 1
+    while os.path.exists(path := _block_path(sdir, k)):
+        out.append((k, path))
+        k += 1
+    return out
+
+
 def get_records(
     stream_dir: str, iterator: dict, limit: int = 10_000
 ) -> tuple[list[dict], dict]:
@@ -243,75 +300,52 @@ def get_records(
     plus the resume iterator. Driver-side (tests/control); the bulk
     path is ``read_stream_records``."""
     sid, after = iterator["shard_id"], iterator["after"]
-    sdir = os.path.join(stream_dir, sid)
     out: list[dict] = []
-    if os.path.isdir(sdir):
-        for name in sorted(os.listdir(sdir)):
-            if not name.startswith("block-"):
-                continue
-            block = int(name[len("block-"):].split(".")[0])
-            if after is not None and _seq(block + 1, 0) <= after:
-                continue  # whole block consumed
-            with open(os.path.join(sdir, name)) as fh:
-                for i, line in enumerate(fh):
-                    seq = _seq(block, i)
-                    if after is not None and seq <= after:
-                        continue
-                    row = json.loads(line)
-                    out.append(
-                        {
-                            "SequenceNumber": seq,
-                            "PartitionKey": row["pk"],
-                            "Data": base64.b64decode(row["d"]),
-                        }
-                    )
-                    if len(out) >= limit:
-                        return out, {"shard_id": sid, "after": seq}
+    for block, path in _blocks_after(os.path.join(stream_dir, sid), after):
+        with open(path) as fh:
+            for i, line in enumerate(fh):
+                seq = _seq(block, i)
+                if after is not None and seq <= after:
+                    continue
+                row = json.loads(line)
+                out.append(
+                    {
+                        "SequenceNumber": seq,
+                        "PartitionKey": row["pk"],
+                        "Data": base64.b64decode(row["d"]),
+                    }
+                )
+                if len(out) >= limit:
+                    return out, {"shard_id": sid, "after": seq}
     new_after = out[-1]["SequenceNumber"] if out else after
     return out, {"shard_id": sid, "after": new_after}
 
 
-def read_stream_records(spark: SparkSession, stream_dir: str) -> DataFrame:
-    """The DISTRIBUTED consume path: every shard's block files as one
-    Spark scan → (shard_id, sequence_number, partition_key, data,
-    shard_generation). Shard id and block index parse out of the file
-    path; the in-block index is the persisted ``i`` column, so the
-    sequence number is reconstructed exactly as the producer's acks
-    reported it. ``shard_generation`` (from the persisted topology)
-    is the resharding-aware coarse order: sorting any one hash range
-    by (shard_generation, sequence_number) reproduces arrival order
-    across a split/merge boundary — the parent-before-children rule
-    as an ORDER BY instead of a stateful consumer."""
-    topo = load_topology(stream_dir)
-    gens = {sid: shard_generation(topo, sid) for sid in topo}
-    shard_dirs = [
-        os.path.join(stream_dir, sid)
-        for sid in sorted(topo)
-        if os.path.isdir(os.path.join(stream_dir, sid))
-    ]
-    if not shard_dirs:
+def _records(spark: SparkSession, paths: list[str], topo: dict) -> DataFrame:
+    """The one definition of a consumed record: a lazy scan of block
+    files, or of shard directories of them, → ``RECORD_SCHEMA``. Shard
+    id and block index parse out of the file path; the in-block index
+    is the persisted ``i`` column, so the sequence number is
+    reconstructed exactly as the producer's acks reported it.
+    ``shard_generation`` comes from the persisted topology."""
+    if not paths:
         return spark.createDataFrame([], RECORD_SCHEMA)
-    # list the shard DIRECTORIES with a glob filter instead of passing
-    # per-shard glob patterns: Hadoop glob expansion stats every block
-    # file one by one (measured 2.1-3.1 s of pure driver listing at
-    # 1024 blocks), while a directory listStatus is one call per shard
-    # and the filter applies during that listing (same file set) —
-    # guide §6 (listing cost), 0.2 s for the same stream
+    gen_map = F.create_map(
+        *[F.lit(x) for sid in topo for x in (sid, shard_generation(topo, sid))]
+    )
     df = (
         spark.read.schema("i int, pk string, d string")
         .option("pathGlobFilter", "block-*.jsonl")
-        .json(shard_dirs)
-        .withColumn("_file", F.input_file_name())
+        .json(paths)
     )
-    gen_map = F.create_map(
-        *[F.lit(x) for kv in gens.items() for x in kv]
-    )
-    block = F.regexp_extract("_file", r"block-(\d+)\.jsonl", 1).cast("int")
-    sid = F.regexp_extract("_file", r"(shardId-\d+)", 1)
+    # one select: every DataFrame step re-analyzes the plan on the
+    # driver, and plan analysis is most of a small consume round
+    block = F.regexp_extract(F.input_file_name(), r"block-(\d+)\.jsonl", 1)
+    sid = F.regexp_extract(F.input_file_name(), r"(shardId-\d+)", 1)
     return df.select(
         sid.alias("shard_id"),
         F.concat(
-            F.lpad(block.cast("string"), _BLOCK_W, "0"),
+            block,  # already _BLOCK_W digits in the file name
             F.lit("."),
             F.lpad(F.col("i").cast("string"), _IDX_W, "0"),
         ).alias("sequence_number"),
@@ -319,6 +353,30 @@ def read_stream_records(spark: SparkSession, stream_dir: str) -> DataFrame:
         F.unbase64("d").alias("data"),
         gen_map[sid].cast("int").alias("shard_generation"),
     )
+
+
+def read_stream_records(spark: SparkSession, stream_dir: str) -> DataFrame:
+    """The DISTRIBUTED read of the whole stream: every shard's block
+    files as one lazy Spark scan → (shard_id, sequence_number,
+    partition_key, data, shard_generation), the projection
+    ``consume_new_records`` shares. ``shard_generation`` is the
+    resharding-aware coarse order: sorting any one hash range by
+    (shard_generation, sequence_number) reproduces arrival order
+    across a split/merge boundary — the parent-before-children rule
+    as an ORDER BY instead of a stateful consumer."""
+    topo = load_topology(stream_dir)
+    # list the shard DIRECTORIES with a glob filter instead of passing
+    # per-shard glob patterns: Hadoop glob expansion stats every block
+    # file one by one (measured 2.1-3.1 s of pure driver listing at
+    # 1024 blocks), while a directory listStatus is one call per shard
+    # and the filter applies during that listing (same file set) —
+    # guide §6 (listing cost), 0.2 s for the same stream
+    shard_dirs = [
+        os.path.join(stream_dir, sid)
+        for sid in sorted(topo)
+        if os.path.isdir(os.path.join(stream_dir, sid))
+    ]
+    return _records(spark, shard_dirs, topo)
 
 
 def _sid_num(shard_id: str) -> int:
@@ -419,19 +477,9 @@ def _shard_exhausted(
 ) -> bool:
     """A CLOSED shard is exhausted when its last record is consumed
     (or it never received any)."""
-    recs, _ = get_records(
-        stream_dir,
-        get_shard_iterator(
-            stream_dir,
-            shard_id,
-            "AFTER_SEQUENCE_NUMBER"
-            if shard_id in positions
-            else "TRIM_HORIZON",
-            positions.get(shard_id),
-        ),
-        limit=1,
+    return not _blocks_after(
+        os.path.join(stream_dir, shard_id), positions.get(shard_id)
     )
-    return not recs
 
 
 def consume_new_records(
@@ -441,8 +489,25 @@ def consume_new_records(
     returns (records strictly after the checkpoint positions, the new
     positions to commit AFTER processing succeeds). A crash before
     ``checkpoint.commit(new_positions)`` re-serves exactly the same
-    records next round — the position filter is the dedup, so a
-    committed sequence number is never served twice.
+    records next round — the positions are the dedup, so a committed
+    sequence number is never served twice.
+
+    The driver chooses the files and Spark reads only those (Structured
+    Streaming's ``getBatch(start, end)`` over offset ranges): for each
+    eligible shard, the blocks after its committed position
+    (``_blocks_after``). A shard's new position is the last record of
+    its last chosen block, read on the driver. The returned frame is a
+    lazy scan of those blocks, so the caller's action is the round's
+    only scan. A shard read from its first block is passed as its
+    directory: Spark lists up to 32 paths on the driver
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``) and
+    more with a job of one task per path, so this call launches no
+    Spark job unless it passes more than 32 paths. No materialization
+    is needed to pin the round: blocks are published whole and never
+    change, and the frame serves only each shard's (position, new
+    position] range, so the chosen run is the snapshot the new
+    positions describe — blocks a producer appends meanwhile arrive
+    next round.
 
     Resharding rule (the KCL contract): a CHILD shard is eligible
     only when every ANCESTOR (transitively, via the parent links) is
@@ -453,7 +518,7 @@ def consume_new_records(
     that never received records is trivially exhausted, but its own
     parent may still hold unconsumed records. Ineligible children are
     simply deferred to a later round (their records are not lost,
-    just not yet served)."""
+    just not yet served). A GC-retired (done) shard is never served."""
     topo = load_topology(stream_dir)
     doc = checkpoint._doc()
     positions, done = doc["positions"], doc["done_ranges"]
@@ -480,55 +545,28 @@ def consume_new_records(
         anc_ok[sid] = ok
         return ok
 
-    eligible = {sid for sid in topo if ancestors_drained(sid)}
-    df = read_stream_records(spark, stream_dir).filter(
-        F.col("shard_id").isin(sorted(eligible))
-        if eligible
-        else F.lit(False)
-    )
-    if done:
-        # A done shard's position entry is gone, so without this
-        # filter its (fully consumed) records would be re-served. The
-        # predicate is O(ranges), not O(retired shards) — the point
-        # of the range compaction.
-        num = F.regexp_extract("shard_id", r"shardId-(\d+)", 1).cast(
-            "bigint"
-        )
-        import functools
-        import operator
-
-        in_done = functools.reduce(
-            operator.or_, [num.between(lo, hi) for lo, hi in done]
-        )
-        df = df.filter(~in_done)
-    pos_items = [
-        (k, v) for k, v in positions.items()
-    ]
-    if pos_items:
-        pos_map = F.create_map(
-            *[F.lit(x) for kv in pos_items for x in kv]
-        )
-        df = df.filter(
-            pos_map[F.col("shard_id")].isNull()
-            | (F.col("sequence_number") > pos_map[F.col("shard_id")])
-        )
-    # Pin the served frame to ONE snapshot by materializing it: the
-    # returned df must not re-evaluate the scan at the caller's action
-    # (a producer appending blocks in between would serve records
-    # ABOVE the committed positions — processed this round AND
-    # re-served next round, duplicates despite the dedup contract).
-    # The eager checkpoint both pins the snapshot and makes this the
-    # round's ONLY block-log scan — the position collect below and the
-    # caller's processing reuse the materialized rows instead of each
-    # re-parsing every block file (one consume round is micro-batch
-    # sized, so the materialization is bounded).
-    df = df.localCheckpoint(eager=True)
-    new_rows = (
-        df.groupBy("shard_id")
-        .agg(F.max("sequence_number").alias("mx"))
-        .collect()
-    )  # bounded: one row per shard
+    paths: list[str] = []
     new_positions = dict(positions)
-    for r in new_rows:
-        new_positions[r["shard_id"]] = r["mx"]
+    for sid in sorted(topo):
+        if _in_ranges(_sid_num(sid), done) or not ancestors_drained(sid):
+            continue
+        sdir = os.path.join(stream_dir, sid)
+        blocks = _blocks_after(sdir, positions.get(sid))
+        if blocks:
+            # a run from block 0 is the whole shard: pass its directory,
+            # one listing on the driver, where more than 32 paths make
+            # Spark list them with a job of one task per path
+            paths += [sdir] if blocks[0][0] == 0 else [p for _, p in blocks]
+            new_positions[sid] = _last_seq(*blocks[-1])
+    df = _records(spark, paths, topo)
+    if new_positions:
+        # serves each shard's (position, new position]: drops the consumed
+        # rows of a re-read block, and the blocks a directory listing
+        # finds that were published after the run was chosen
+        seq, shard = F.col("sequence_number"), F.col("shard_id")
+        lo = F.create_map(
+            *[F.lit(x) for k in new_positions for x in (k, positions.get(k, ""))]
+        )
+        hi = F.create_map(*[F.lit(x) for kv in new_positions.items() for x in kv])
+        df = df.filter((seq > lo[shard]) & (seq <= hi[shard]))
     return df, new_positions

@@ -2208,11 +2208,12 @@ def q293_stream_consume_flatten_sink(
     """The COMPLETE reference pipeline through the STREAM (round-11
     verdict #4): q284 closed produce→consume→transform; this carries
     the consumed records on through the reference's flatten stage —
-    checkpointed consume (``consume_new_records``: at-least-once with
-    dedup-on-SequenceNumber, positions committed only after the sink
-    write succeeds — the crash-safe order) → XML parse → DECLARED EAV
-    pivot (op 10) → quoted Hive-partitioned CSV sink partitioned on
-    (typeOfReading, y, m, d) (ops 17+18 — exactly
+    checkpointed consume (``consume_new_records``: a lazy scan of only
+    the blocks after the committed positions, chosen on the driver;
+    at-least-once with dedup-on-SequenceNumber, positions committed
+    only after the sink write succeeds — the crash-safe order) → XML
+    parse → DECLARED EAV pivot (op 10) → quoted Hive-partitioned CSV
+    sink partitioned on (typeOfReading, y, m, d) (ops 17+18 — exactly
     file_flattener.py:157-170's layout) → PARTITION-PRUNED re-read
     (op 19: two reading types × a 10-day window — the returned frame
     is the LAZY re-read, so the plan audit sees the pruned scan).
