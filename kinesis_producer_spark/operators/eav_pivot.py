@@ -122,7 +122,6 @@ def pivot_declared(
 def pivot_dynamic(
     df: DataFrame,
     readings_col: str | Column = "readings",
-    uom_suffix: str = "_UoM",
 ) -> DataFrame:
     """Accreting-schema EAV pivot: columns = distinct attribute names.
 

@@ -130,7 +130,7 @@ def flatten_day(
         )
         flat = wide.select(
             *[F.col("envelope").getItem(k).alias(k) for k in vocab["envelope"]],
-            *[c for c in wide.columns if c not in raw.columns and c not in ("envelope", "readings", "_corrupt_record")],
+            *wide.columns[len(parsed.columns) :],
         )
     else:
         parsed = parse_component_docs(raw, "payload", mode="FAILFAST")
@@ -145,7 +145,6 @@ def produce_day(
     src_root: str,
     reading_type: str,
     sink,
-    ts_col_from_envelope: str = "readingTimestampUTC",
     speedup: float = float("inf"),
     year: str | None = None,
     month: str | None = None,
@@ -166,7 +165,7 @@ def produce_day(
     )
     parsed = parse_signal_messages(raw, "payload", mode="FAILFAST")
     timed = parsed.select(
-        F.to_timestamp(F.col("envelope").getItem(ts_col_from_envelope)).alias("ts"),
+        F.to_timestamp(F.col("envelope").getItem("readingTimestampUTC")).alias("ts"),
         "payload",
         F.col("partition_id").alias("partition_key"),
     )

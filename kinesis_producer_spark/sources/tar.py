@@ -109,16 +109,14 @@ def tar_members(
     return src.mapInPandas(unpack, MEMBER_SCHEMA)
 
 
-def read_tar_archives(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
+def read_tar_archives(spark: SparkSession, path: str) -> DataFrame:
     """Scan a directory of tar files → one row per member.
 
     ``binaryFile`` provides the distributed listing + splitting the
     reference hand-rolled with its S3 batch packer (aws_utils.py:27-45).
     """
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return tar_members(reader.load(path), content_col="content", archive_col="path")
+    src = spark.read.format("binaryFile").load(path)
+    return tar_members(src, content_col="content", archive_col="path")
 
 
 SHARD_SCHEMA = T.StructType(

@@ -205,38 +205,34 @@ _component_udf = F.pandas_udf(
 from kinesis_producer_spark.tables import fan_out  # noqa: E402  (shared: re-export)
 
 
-def _apply_mode(df: DataFrame, mode: str) -> DataFrame:
-    if mode == "FAILFAST":
-        probe = F.when(
-            F.col("_corrupt_record").isNotNull(),
-            F.raise_error(F.concat(F.lit("Malformed XML: "), F.col("_corrupt_record"))),
-        ).otherwise(F.lit(None))
-        df = df.withColumn("_corrupt_record", probe)
-    elif mode != "PERMISSIVE":
+def _parse(df: DataFrame, xml_col: str | Column, udf, fields: list[str], mode: str) -> DataFrame:
+    """``df`` plus the UDF's ``fields`` and ``_corrupt_record``, in one
+    ``select``; under FAILFAST the corrupt-record column raises."""
+    if mode not in ("FAILFAST", "PERMISSIVE"):
         raise ValueError(f"mode must be FAILFAST or PERMISSIVE, got {mode}")
-    return df
+    corrupt = F.col("_parsed._corrupt_record")
+    if mode == "FAILFAST":
+        corrupt = F.when(
+            corrupt.isNotNull(), F.raise_error(F.concat(F.lit("Malformed XML: "), corrupt))
+        ).otherwise(F.lit(None))
+    parsed = fan_out(df).withColumn("_parsed", udf(_col(xml_col)))
+    return parsed.select(
+        "*", *[f"_parsed.{f}" for f in fields], corrupt.alias("_corrupt_record")
+    ).drop("_parsed")
 
 
 def parse_signal_messages(
     df: DataFrame, xml_col: str | Column = "payload", mode: str = "PERMISSIVE"
 ) -> DataFrame:
     """Add ``envelope`` / ``readings`` / ``_corrupt_record`` columns."""
-    parsed = fan_out(df).withColumn("_parsed", _signal_udf(_col(xml_col)))
-    out = parsed.select("*", "_parsed.envelope", "_parsed.readings", "_parsed._corrupt_record").drop(
-        "_parsed"
-    )
-    return _apply_mode(out, mode)
+    return _parse(df, xml_col, _signal_udf, ["envelope", "readings"], mode)
 
 
 def parse_component_docs(
     df: DataFrame, xml_col: str | Column = "payload", mode: str = "PERMISSIVE"
 ) -> DataFrame:
     """Add ``doc_attrs`` / ``components`` / ``_corrupt_record`` columns."""
-    parsed = fan_out(df).withColumn("_parsed", _component_udf(_col(xml_col)))
-    out = parsed.select(
-        "*", "_parsed.doc_attrs", "_parsed.components", "_parsed._corrupt_record"
-    ).drop("_parsed")
-    return _apply_mode(out, mode)
+    return _parse(df, xml_col, _component_udf, ["doc_attrs", "components"], mode)
 
 
 def _col(c: str | Column) -> Column:

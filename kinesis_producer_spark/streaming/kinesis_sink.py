@@ -27,8 +27,10 @@ gated behind import-try — boto3 is not in this image).
 
 At 100 TB the scale knobs are partition count (parallel put_records
 streams) and Kinesis shard count; per-shard caps (1 MB/s, 1000 rec/s)
-are the service-side bound, so the sink optionally pre-partitions by
-partition key to keep per-shard ordering while spreading load.
+are the service-side bound. The sink sends each partition in its own
+order; a caller that wants each key's traffic in one task (per-shard
+ordering, one rate limiter per shard) repartitions its frame by
+partition key first.
 """
 
 from __future__ import annotations
@@ -366,12 +368,13 @@ class ShardRateLimiter:
     as ``RecordingTransport`` so tests are deterministic. Clock and
     sleeper are injectable — tests run on virtual time.
 
-    One limiter instance lives per partition task (transport-factory
-    scope); with ``repartition_by_key`` each shard's traffic flows
-    through one task, so local buckets enforce the global quota. Without
-    key partitioning the enforcement is per-task (conservative overall
-    only if tasks ≲ shards), which is still the right backpressure
-    shape: throttle at the source of the burst.
+    One limiter instance lives per ``send_partition`` call (one per
+    partition task, or one per driver-side send). When the caller has
+    repartitioned its frame by partition key, each shard's traffic flows
+    through one task, so local buckets enforce the global quota.
+    Otherwise the enforcement is per-task (conservative overall only if
+    tasks ≲ shards), which is still the right backpressure shape:
+    throttle at the source of the burst.
 
     Shard prediction always follows the hash-range contract (default:
     ``ShardMap.uniform(n_shards)`` — the same topology the transport
@@ -627,6 +630,11 @@ def _commit_acks(edir: str, attempt_id: str, tmps: list[str]) -> None:
         os.remove(left)
 
 
+def _put_entries(entries: Iterable[tuple]) -> list[dict]:
+    """``(data, partition key)`` pairs as ``put_records`` entries."""
+    return [{"Data": d, "PartitionKey": k} for d, k in entries]
+
+
 @dataclass
 class KinesisSink:
     """foreachBatch-compatible writer with ack/retry/dead-letter.
@@ -643,15 +651,36 @@ class KinesisSink:
     transport_factory: Callable[[], Transport]
     max_retries: int = 3
     backoff_s: float = 0.05
-    repartition_by_key: bool = False
     rate_limiter_factory: Callable[[], "ShardRateLimiter"] | None = None
 
     def send_partition(self, records: list[dict]) -> list[dict]:
-        """Send one partition's records; return one ack row per record."""
+        """Send one partition's records; return one ack row per record,
+        in input order.
+
+        A record whose ``Data`` or ``PartitionKey`` is null cannot be
+        sent, and failing the task for it would, under exactly_once,
+        replay the same epoch forever; it gets a dead-letter ack with
+        error code ``NullRecord`` and 0 attempts instead. No transport
+        is built when nothing is left to send."""
+        acks: dict[int, dict] = {}
+        pending = []  # (original index, record)
+        for i, rec in enumerate(records):
+            if rec["Data"] is None or rec["PartitionKey"] is None:
+                acks[i] = {
+                    "partition_key": rec["PartitionKey"],
+                    "data_md5": None,
+                    "status": "dead_letter",
+                    "attempts": 0,
+                    "error_code": "NullRecord",
+                    "sequence_number": None,
+                    "shard_id": None,
+                }
+            else:
+                pending.append((i, {**rec, "Data": bytes(rec["Data"])}))
+        if not pending:
+            return [acks[i] for i in sorted(acks)]
         transport = self.transport_factory()
         limiter = self.rate_limiter_factory() if self.rate_limiter_factory else None
-        acks: dict[int, dict] = {}
-        pending = list(enumerate(records))  # (original index, record)
         attempt = 0
         while pending and attempt <= self.max_retries:
             attempt += 1
@@ -705,35 +734,6 @@ class KinesisSink:
                 time.sleep(self.backoff_s * (2 ** (attempt - 1)))
         return [acks[i] for i in sorted(acks)]
 
-    def _send_entries(self, entries: list[tuple]) -> list[dict]:
-        """Send ``(data, partition key)`` entries; one ack row each, in order."""
-        # Null data or partition key cannot be sent (and used to crash
-        # the task — under exactly_once that wedges the stream in a
-        # replay loop on the same epoch): route such records straight to
-        # dead-letter acks instead.
-        valid = [
-            (i, {"Data": bytes(d), "PartitionKey": k})
-            for i, (d, k) in enumerate(entries)
-            if d is not None and k is not None
-        ]
-        acks_by_i: dict[int, dict] = {}
-        if valid:
-            sent = self.send_partition([r for _, r in valid])
-            for (i, _), a in zip(valid, sent):
-                acks_by_i[i] = a
-        for i, (d, k) in enumerate(entries):
-            if i not in acks_by_i:
-                acks_by_i[i] = {
-                    "partition_key": k,
-                    "data_md5": None,
-                    "status": "dead_letter",
-                    "attempts": 0,
-                    "error_code": "NullRecord",
-                    "sequence_number": None,
-                    "shard_id": None,
-                }
-        return [acks_by_i[i] for i in range(len(entries))]
-
     def _source(
         self, df: DataFrame, data_col: str | Column, partition_key_col: str | Column
     ) -> tuple[DataFrame, bool]:
@@ -746,9 +746,7 @@ class KinesisSink:
             return src, True
         # plan statistics: these run the optimizer, not a Spark job
         size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-        if size <= IN_PROCESS_MAX_BYTES:
-            return src, True
-        return (src.repartition("_key") if self.repartition_by_key else src), False
+        return src, size <= IN_PROCESS_MAX_BYTES
 
     def write_batch(
         self,
@@ -773,13 +771,14 @@ class KinesisSink:
         """
         src, in_process = self._source(df, data_col, partition_key_col)
         if in_process:
-            return local_frame(df.sparkSession, self._send_entries(src.collect()), ACK_SCHEMA)
+            acks = self.send_partition(_put_entries(src.collect()))
+            return local_frame(df.sparkSession, acks, ACK_SCHEMA)
         sink = self
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 if len(pdf):
-                    acks = sink._send_entries(list(zip(pdf["_data"], pdf["_key"])))
+                    acks = sink.send_partition(_put_entries(zip(pdf["_data"], pdf["_key"])))
                     yield pd.DataFrame(acks, columns=ACK_SCHEMA.fieldNames())
 
         return src.mapInPandas(run, ACK_SCHEMA)
@@ -804,7 +803,7 @@ class KinesisSink:
         tmps: list[str] = []
         try:
             if in_process:
-                acks = self._send_entries(src.collect())
+                acks = self.send_partition(_put_entries(src.collect()))
                 if edir is None:
                     return _ledger(acks)
                 tmp = tmp_for(0)
@@ -816,7 +815,9 @@ class KinesisSink:
                 def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     from pyspark import TaskContext
 
-                    acks = (sink._send_entries(list(zip(p["_data"], p["_key"]))) for p in batches)
+                    acks = (
+                        sink.send_partition(_put_entries(zip(p["_data"], p["_key"]))) for p in batches
+                    )
                     tmp = None
                     if edir is None:
                         counters = _ledger_sum(map(_ledger, acks))

@@ -57,6 +57,7 @@ from __future__ import annotations
 import base64
 import json
 import os
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -336,7 +337,9 @@ def _records(spark: SparkSession, paths: list[str], topo: dict) -> DataFrame:
     df = (
         spark.read.schema("i int, pk string, d string")
         .option("pathGlobFilter", "block-*.jsonl")
-        .json(paths)
+        # Spark reads each path as a glob pattern: escape the glob
+        # characters a stream directory's own path may hold
+        .json([re.sub(r"([\\\[\]{}*?])", r"\\\1", p) for p in paths])
     )
     # one select: every DataFrame step re-analyzes the plan on the
     # driver, and plan analysis is most of a small consume round

@@ -99,8 +99,10 @@ def replay_to_kinesis(
 ) -> DataFrame:
     """Batch-mode paced replay through a KinesisSink.
 
-    Pacing happens between event-time groups. Each group already sits on
-    the driver (``toLocalIterator``), so it is handed to
+    The groups are ``event_time_batches`` whose payload is the record
+    ``struct(data, partition_key)``: the payload cast to binary and the
+    key cast to string. Pacing happens between groups. Each group already
+    sits on the driver (``toLocalIterator``), so it is handed to
     ``sink.write_batch`` as a local frame and sent in-process: no Spark
     job per group, only the one sorted scan that forms the groups. Acks
     are collected per group; the returned ack frame is local too, so
@@ -110,16 +112,10 @@ def replay_to_kinesis(
     from kinesis_producer_spark.streaming.kinesis_sink import ACK_SCHEMA, local_frame
 
     key = F.col(partition_key) if isinstance(partition_key, str) else partition_key
-    prepared = df.select(
-        F.col(ts_col).alias("ts"),
-        F.col(payload_col).cast("binary").alias("data"),
-        key.cast("string").alias("partition_key"),
+    record = F.struct(
+        F.col(payload_col).cast("binary").alias("data"), key.cast("string").alias("partition_key")
     )
-    batches = (
-        prepared.groupBy("ts")
-        .agg(F.collect_list(F.struct("data", "partition_key")).alias("payloads"))
-        .orderBy("ts")
-    )
+    batches = event_time_batches(df, ts_col, record)
     spark = df.sparkSession
     acks: list = []
 

@@ -19,12 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kinesis_producer_spark.operators.eav_pivot import (
-    DECLARED_READINGS,
-    ENVELOPE_ATTRS,
-    READINGS_W_UOM,
-    pivot_declared,
-)
+from kinesis_producer_spark.operators.eav_pivot import ENVELOPE_ATTRS, pivot_declared
 from kinesis_producer_spark.sources.xml import parse_signal_messages
 
 
@@ -39,26 +34,17 @@ def firehose_transform(
     Adds: ``result`` ('Ok' | 'ProcessingFailed'), ``data_out``
     (base64 JSON of envelope attrs + declared readings).
     """
-    declared = DECLARED_READINGS if declared is None else declared
-    uom_for = READINGS_W_UOM if uom_for is None else uom_for
     data = F.col(data_col) if isinstance(data_col, str) else data_col
 
     decoded = df.withColumn("_xml", F.unbase64(data).cast("string"))
     parsed = parse_signal_messages(decoded, "_xml", mode="PERMISSIVE")
     wide = pivot_declared(parsed, declared=declared, uom_for=uom_for, keep_extras=False)
-
-    out_fields = [F.col("envelope").getItem(a).alias(a) for a in ENVELOPE_ATTRS]
-    for name in declared:
-        out_fields.append(F.col(name).alias(name))
-        if name in uom_for:
-            out_fields.append(F.col(f"{name}_UoM").alias(f"{name}_UoM"))
-
+    # the declared readings with their _UoM companions, as the pivot appended them
+    pivoted = wide.columns[len(parsed.columns) :]
+    record = F.struct(*[F.col("envelope").getItem(a).alias(a) for a in ENVELOPE_ATTRS], *pivoted)
     ok = F.col("_corrupt_record").isNull()
-    return (
-        wide.withColumn("result", F.when(ok, F.lit("Ok")).otherwise(F.lit("ProcessingFailed")))
-        .withColumn(
-            "data_out",
-            F.when(ok, F.base64(F.to_json(F.struct(*out_fields)).cast("binary"))),
-        )
-        .drop("_xml", "envelope", "readings", *[c for c in wide.columns if c in declared], *[f"{n}_UoM" for n in uom_for])
-    )
+    return wide.select(
+        "*",
+        F.when(ok, F.lit("Ok")).otherwise(F.lit("ProcessingFailed")).alias("result"),
+        F.when(ok, F.base64(F.to_json(record).cast("binary"))).alias("data_out"),
+    ).drop("_xml", "envelope", "readings", *pivoted)

@@ -95,6 +95,40 @@ def test_unknown_collection_is_error(spark):
     assert "Unknown collection" in out["_corrupt_record"]
 
 
+def test_firehose_record_lists_envelope_then_each_reading_with_its_uom(spark):
+    """``data_out``'s JSON holds the envelope attributes in their declared
+    order, then each declared reading followed by its ``_UoM`` companion,
+    and the transform adds only ``_corrupt_record``, ``result`` and
+    ``data_out`` to the input's columns."""
+    import base64
+    import json
+
+    from kinesis_producer_spark.operators.eav_pivot import (
+        DECLARED_READINGS,
+        ENVELOPE_ATTRS,
+        READINGS_W_UOM,
+    )
+    from kinesis_producer_spark.streaming.transform import firehose_transform
+
+    envelope = "".join(f"<NS1:{a}>{a}-v</NS1:{a}>" for a in reversed(ENVELOPE_ATTRS))
+    readings = "".join(
+        _reading(n, f"{n}-v", "u" if n in READINGS_W_UOM else None)
+        for n in reversed(DECLARED_READINGS)
+    )
+    b64 = base64.b64encode(_msg(readings, envelope).encode()).decode()
+    out = firehose_transform(spark.createDataFrame([(7, b64)], "id int, data string"))
+    assert out.columns == ["id", "data", "_corrupt_record", "result", "data_out"]
+    row = out.collect()[0]
+    assert row["result"] == "Ok"
+    record = json.loads(base64.b64decode(row["data_out"]), object_pairs_hook=list)
+    expected = [(a, f"{a}-v") for a in ENVELOPE_ATTRS]
+    for n in DECLARED_READINGS:
+        expected.append((n, f"{n}-v"))
+        if n in READINGS_W_UOM:
+            expected.append((f"{n}_UoM", "u"))
+    assert record == expected
+
+
 def _component(code: str | None, children: str = "", attrs: str = "", name: str = "") -> str:
     c = f"<NS1:componentCode>{code}</NS1:componentCode>" if code is not None else ""
     n = f"<NS1:componentName>{name}</NS1:componentName>" if name else ""

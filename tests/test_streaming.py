@@ -1119,6 +1119,51 @@ def test_null_records_dead_letter_instead_of_crashing(spark):
 
 
 
+def test_send_partition_dead_letters_null_records_in_input_order():
+    """``send_partition`` routes a record with null ``Data`` or null
+    ``PartitionKey`` to a NullRecord dead letter at its own position and
+    sends only the others."""
+    import hashlib
+
+    t = RecordingTransport(fail_first_attempt_prefix="zz")
+    sink = KinesisSink("s", lambda: t, backoff_s=0.0)
+    recs = [
+        {"Data": b"a", "PartitionKey": "k"},
+        {"Data": None, "PartitionKey": "k"},
+        {"Data": b"b", "PartitionKey": None},
+        {"Data": bytearray(b"c"), "PartitionKey": "k2"},
+        {"Data": None, "PartitionKey": None},
+    ]
+    acks = sink.send_partition(recs)
+    assert [(a["status"], a["error_code"], a["attempts"]) for a in acks] == [
+        ("ok", None, 1),
+        ("dead_letter", "NullRecord", 0),
+        ("dead_letter", "NullRecord", 0),
+        ("ok", None, 1),
+        ("dead_letter", "NullRecord", 0),
+    ]
+    assert [a["partition_key"] for a in acks] == ["k", "k", None, "k2", None]
+    assert [a["data_md5"] for a in acks] == [
+        hashlib.md5(b"a").hexdigest(), None, None, hashlib.md5(b"c").hexdigest(), None
+    ]
+    assert all(a["sequence_number"] is None for a in acks if a["status"] == "dead_letter")
+    assert [bytes(r["Data"]) for call in t.calls for r in call] == [b"a", b"c"]
+
+
+def test_send_partition_of_only_null_records_builds_no_transport():
+    """A partition with nothing to send builds no transport."""
+
+    def no_transport():
+        raise AssertionError("a transport was built for nothing to send")
+
+    sink = KinesisSink("s", no_transport, backoff_s=0.0)
+    acks = sink.send_partition(
+        [{"Data": None, "PartitionKey": "k"}, {"Data": b"x", "PartitionKey": None}]
+    )
+    assert [a["error_code"] for a in acks] == ["NullRecord", "NullRecord"]
+    assert sink.send_partition([]) == []
+
+
 _NULL_ROWS = [("ok-payload", "k"), (None, "k"), ("x", None), ("ok2", "k2")]
 
 
@@ -4728,6 +4773,33 @@ def test_kinesis_consume_from_trim_horizon_reads_shard_directories(
     }
     ck.commit(pos)
     assert rows(ks.consume_new_records(spark, sd, ck)[0]) == sorted(late)
+
+
+def test_kinesis_reads_a_stream_under_a_glob_character_path(spark, tmp_path, count_jobs):
+    """Spark reads each path it is given as a glob pattern; a stream
+    directory whose path holds ``[`` is still read whole by
+    ``read_stream_records`` and served once by ``consume_new_records``,
+    from its shard directories and from block files past a position,
+    with no Spark job in the consume call."""
+    from kinesis_producer_spark.streaming import kinesis_source as ks
+
+    sd = str(tmp_path / "glob[1]x" / "stream")
+    first = _put_batches(sd, 3, "a")
+
+    def rows(frame):
+        return sorted((r.shard_id, r.sequence_number, bytes(r.data)) for r in frame.collect())
+
+    assert rows(ks.read_stream_records(spark, sd)) == sorted(first)
+    ck = ks.ShardCheckpoint(str(tmp_path / "pos.json"))
+    (df, pos), jobs = count_jobs(lambda: ks.consume_new_records(spark, sd, ck))
+    assert jobs == 0
+    assert rows(df) == sorted(first)
+    ck.commit(pos)
+    second = _put_batches(sd, 2, "b")
+    (df, pos), jobs = count_jobs(lambda: ks.consume_new_records(spark, sd, ck))
+    assert jobs == 0
+    assert rows(df) == sorted(second)
+    assert rows(ks.read_stream_records(spark, sd)) == sorted(first + second)
 
 
 def test_kinesis_consume_resumes_after_mid_block_position(spark, tmp_path):
